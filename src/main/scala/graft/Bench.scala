@@ -1,12 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import com.fasterxml.jackson.databind.ObjectMapper
+import graft.stats.Measure
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 /** Driver-run benchmark: times every registry query at the configured
-  * scale factor and prints ONE JSON line. Config mirrors the production
-  * posture (AQE on, shuffle partitions = cores — the reference fixed
-  * numReducers=100 for a 17-node cluster; on local[N] that would just
-  * add scheduling overhead).
+  * scale factor and prints ONE JSON line. The session is [[Graft.local]]
+  * (AQE on, shuffle partitions = cores), the one Verify checks.
   *
   * Methodology: each query runs twice back-to-back and the FASTER run is
   * reported (JMH-style best-of-N with N=2). Round 1 showed first-run
@@ -19,65 +20,33 @@ import org.apache.spark.sql.SparkSession
   * caching queries report honest cold-index times. Times are printed with ms precision to keep the JSON
   * line short enough for the driver's output-tail capture (the round-1
   * line was truncated mid-JSON and failed to parse); the full-precision
-  * per-run data lands in bench_local.json. */
+  * per-run data lands in bench_local.json.
+  *
+  * A query that throws is still timed, but it is named in the flat
+  * `failed` field of the record, so it cannot pass as a fast one. Each
+  * query's best run also goes to stderr as one `[bench-query]` line with
+  * its task counters (jobs, stages, shuffle, executor run and GC time). */
 object Bench {
+  /** One timed run of one query. */
+  final case class Run(sec: Double, gcMs: Long, failed: Boolean, stats: JoinStats)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Optional state-store A/B knob: SPARK_GRAFT_STATE_PROVIDER=rocksdb
-    // runs every streaming drain on RocksDB (the 100 TB state backend)
-    // instead of the default HDFS-backed in-memory maps — used for the
-    // measured provider decision in EXPERIMENTS.md. TWS queries force
-    // RocksDB themselves either way.
-    val provider = sys.env.get("SPARK_GRAFT_STATE_PROVIDER").map {
-      case "rocksdb" =>
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-      case other => other
-    }
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // Even with the UI off, the app-status listener retains per-
-      // execution metadata incl. FULL plan strings (some of ours are
-      // hundreds of KB); at 212 queries × 2 runs the defaults (1000
-      // executions / 1000 jobs) pin hundreds of MB of driver heap and
-      // the resulting GC pressure contaminated late-alphabet queries
-      // (join_broadcast measured 0.28 s isolated vs 5.0 s mid-run).
-      .config("spark.sql.ui.retainedExecutions", "16")
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "100")
-      .config("spark.ui.retainedTasks", "1000")
-      // one-shot stream drains never replay old batches; the default
-      // keeps 100 state-map versions resident per store, and ~30
-      // streaming queries' final states would otherwise stay loaded
-      // for the rest of the run
-      .config("spark.sql.streaming.minBatchesToRetain", "2")
-    val spark = provider.foldLeft(builder0)((b, p) =>
-      b.config("spark.sql.streaming.stateStore.providerClass", p))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.local()
 
     // JVM/session warmup outside the timed region: one tiny action so the
     // first measured query doesn't pay SparkSession + codegen bootstrap
     spark.range(10).count()
 
     // Optional local-debug filter: SPARK_GRAFT_ONLY="a,b" times a subset.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val subset = Graft.only.isDefined
     // Environment diagnostics (stderr, so stdout stays pure JSON): when a
     // driver-context run disagrees with the committed record, these make
     // the gap ATTRIBUTABLE (GC vs load vs memory) instead of a mystery —
     // round-4's 274.7 s driver run vs 152 s same-commit clean record.
     import java.lang.management.ManagementFactory
-    def gcMillis(): Long = {
-      import scala.jdk.CollectionConverters._
+    def gcMillis(): Long =
       ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
-    }
     def diag(tag: String): Unit = {
       val os = ManagementFactory.getOperatingSystemMXBean
       val rt = Runtime.getRuntime
@@ -91,22 +60,19 @@ object Bench {
     // it — the baseline for the regime self-adjudication below
     val committed: Map[String, Double] =
       try {
-        val blob = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("bench_local.json")), "UTF-8")
-        // the per-run arrays sit between "runs": and "gc_ms": — gc_ms
-        // entries share the same shape, so slice before matching
-        val runs = blob.substring(blob.indexOf("\"runs\":"),
-          blob.indexOf("\"gc_ms\":"))
-        """"([a-z0-9_]+)":\[([0-9.E-]+),([0-9.E-]+)\]""".r.findAllMatchIn(runs)
-          .map(m => m.group(1) -> math.min(m.group(2).toDouble, m.group(3).toDouble))
+        new ObjectMapper().readTree(new java.io.File("bench_local.json"))
+          .get("runs").properties().asScala
+          .map(e => e.getKey -> math.min(e.getValue.get(0).asDouble, e.getValue.get(1).asDouble))
           .toMap
-      } catch { case _: Throwable => Map.empty }
-    def run(q: QueryDef): (Double, Long) = {
+      } catch { case NonFatal(_) => Map.empty }
+    def run(q: QueryDef): Run = {
       val g0 = gcMillis()
-      val t0 = System.nanoTime()
-      try { q.fn(spark, sfDir).count() }
-      catch { case e: Throwable => System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}") }
-      ((System.nanoTime() - t0) / 1e9, gcMillis() - g0)
+      val (failed, st) = Measure.measured(spark) {
+        try { q.fn(spark, sfDir).count(); false }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}"); true }
+      }
+      Run(st.wallClockSec, gcMillis() - g0, failed, st)
     }
     // Between-query hygiene, OUTSIDE the timed region: a query's leaked
     // cache blocks and memory-sink temp views are its own bug when they
@@ -134,9 +100,9 @@ object Bench {
       sinceGc += 1
       if (sinceGc % 25 == 0) System.gc() // keep full GCs out of timed runs
     }
-    type RunRes = Seq[(String, (Double, Long), (Double, Long))]
-    def measurePass(): RunRes = SparkEntry.registry.sortBy(_.name)
-      .filter(q => only.forall(_.contains(q.name)))
+    def f3(v: Double): String = f"$v%.3f"
+    type RunRes = Seq[(String, Run, Run)]
+    def measurePass(): RunRes = Graft.selected
       .map { q =>
         val a = run(q)
         // drop run 1's cache blocks before run 2: CacheManager matches
@@ -146,9 +112,11 @@ object Bench {
         spark.catalog.clearCache()
         val b = run(q)
         scrub()
+        val best = if (a.sec <= b.sec) a else b
+        System.err.println(s"""[bench-query] {"q":"${q.name}","sec":${f3(best.sec)},""" +
+          s""""failed":${a.failed || b.failed},${best.stats.countersJson}}""")
         (q.name, a, b)
       }
-    def f3(v: Double): String = f"$v%.3f"
     // regime self-adjudication (VERDICT r9 #7): the per-query ratio
     // distribution vs the COMMITTED floors, encoded into the record so
     // the contaminated-run call the round write-ups made in prose is
@@ -156,12 +124,12 @@ object Bench {
     // (reject the record, rerun quiet), isolated large spikes over a
     // clean median are scheduler STALLs, anything else is clean.
     // Queries under 0.5 s on both sides are noise-dominated, excluded
-    // (the floor gate's MIN_SEC rule).
+    // (the floor gate's MIN_SEC rule), and so are failed ones.
     def verdict(results: RunRes): (Double, Double, String) = {
-      val ratios = results.flatMap { case (k, (a, _), (b, _)) =>
-        committed.get(k).collect {
-          case base if base >= 0.5 || math.min(a, b) >= 0.5 =>
-            math.min(a, b) / math.max(base, 1e-9)
+      val ratios = results.flatMap { case (k, a, b) =>
+        val best = math.min(a.sec, b.sec)
+        committed.get(k).filter(_ => !a.failed && !b.failed).collect {
+          case base if base >= 0.5 || best >= 0.5 => best / math.max(base, 1e-9)
         }
       }.sorted
       val medianRatio =
@@ -193,7 +161,7 @@ object Bench {
     // attributable from the JSON alone
     val attemptLog = scala.collection.mutable.ArrayBuffer(
       (loadStart, medianRatio, maxRatio, regime))
-    val maxAttempts = if (only.isEmpty) 3 else 1
+    val maxAttempts = if (subset) 1 else 3
     while ((regime == "stall" || regime == "regime") && attempt < maxAttempts) {
       System.err.println(s"[bench] attempt $attempt verdict=$regime " +
         f"(median=$medianRatio%.3f max=$maxRatio%.3f) — settling 45 s, re-running")
@@ -206,9 +174,10 @@ object Bench {
       medianRatio = v._1; maxRatio = v._2; regime = v._3
       attemptLog += ((loadStart, medianRatio, maxRatio, regime))
     }
-    val qs = results.map { case (k, (a, _), (b, _)) => s""""$k":${f3(math.min(a, b))}""" }
+    val qs = results.map { case (k, a, b) => s""""$k":${f3(math.min(a.sec, b.sec))}""" }
       .mkString("{", ",", "}")
-    val total = results.map { case (_, (a, _), (b, _)) => math.min(a, b) }.sum
+    val total = results.map { case (_, a, b) => math.min(a.sec, b.sec) }.sum
+    val failed = results.collect { case (k, a, b) if a.failed || b.failed => k }
     val loadEnd = load1m()
     // attempts history stays FLAT (the driver scrape chokes on nested
     // braces — see the comment at the print below): one compact string
@@ -217,16 +186,17 @@ object Bench {
       f"$l%.2f/${f3(md)}/${f3(mx)}/$rg" }.mkString(";")
     val envFields = f""""load1m_start":$loadStart%.2f,"load1m_end":$loadEnd%.2f,""" +
       s""""median_ratio":${f3(medianRatio)},"max_ratio":${f3(maxRatio)},""" +
-      s""""regime":"$regime","attempt":$attempt,"attempts":"$attemptsStr""""
+      s""""regime":"$regime","attempt":$attempt,"attempts":"$attemptsStr",""" +
+      s""""failed":"${failed.mkString(",")}""""
     val line = s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs,"sf":"$sfDir",$envFields}"""
     // full-precision record of both runs (+ per-run GC wall-ms deltas,
     // for attributing environment-contaminated runs), for round-over-
     // round analysis — written ONLY on full-registry runs: a
     // SPARK_GRAFT_ONLY debug subset would otherwise clobber the
     // committed record
-    if (only.isEmpty) {
-      val both = results.map { case (k, (a, _), (b, _)) => s""""$k":[$a,$b]""" }.mkString("{", ",", "}")
-      val gcs = results.map { case (k, (_, ga), (_, gb)) => s""""$k":[$ga,$gb]""" }.mkString("{", ",", "}")
+    if (!subset) {
+      val both = results.map { case (k, a, b) => s""""$k":[${a.sec},${b.sec}]""" }.mkString("{", ",", "}")
+      val gcs = results.map { case (k, a, b) => s""""$k":[${a.gcMs},${b.gcMs}]""" }.mkString("{", ",", "}")
       java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_local.json"),
         s"""{"best_of_2":$line,"runs":$both,"gc_ms":$gcs}""" + "\n"): Unit
       // the machine-readable record of this run AS A FILE (VERDICT r11

@@ -1,13 +1,17 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 /** Plan auditor: prints a one-line physical-plan summary per registry
   * query (operator histogram + scale red flags) and exits non-zero if a
   * query plans a scale anti-pattern it shouldn't. Run:
   *
-  *   sbt "runMain graft.Explain /root/testdata/sf0.001"
+  *   sbt "runMain graft.Explain <sfDir> [outDir]"
+  *
+  * With `outDir`, each query's formatted executed plan is also written
+  * to `<outDir>/<query>.txt` (the optimization-round plan evidence).
   *
   * Red flags:
   *  - CartesianProduct anywhere (only the declared cross/theta joins may
@@ -137,28 +141,33 @@ object Explain {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-explain")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.local()
     spark.sparkContext.setLogLevel("ERROR")
+    val flagged = audit(spark, sfDir, Graft.selected, args.lift(1))
+    spark.stop()
+    if (flagged > 0) {
+      System.err.println(s"[explain] $flagged queries flagged")
+      sys.exit(1)
+    }
+  }
 
-    // Optional local-debug filter, same contract as Bench/Verify:
-    // SPARK_GRAFT_ONLY="a,b" audits a subset.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+  /** Run each query, print its executed-plan summary line and return how
+    * many were flagged. With `dumpDir`, also write each query's
+    * `explain("formatted")` of the executed plan to
+    * `<dumpDir>/<query>.txt` — the plan the query RETURNS; lifecycle
+    * bundles that materialize internally surface as LogicalRDD leaves. */
+  def audit(spark: SparkSession, sfDir: String, queries: Seq[QueryDef],
+      dumpDir: Option[String] = None): Int = {
+    dumpDir.foreach(new java.io.File(_).mkdirs())
     var flagged = 0
-    SparkEntry.registry.sortBy(_.name)
-      .filter(q => only.forall(_.contains(q.name))).foreach { q =>
+    queries.foreach { q =>
       try {
         val df = q.fn(spark, sfDir)
         df.count() // finalize AQE plan
+        dumpDir.foreach { d =>
+          java.nio.file.Files.writeString(java.nio.file.Paths.get(d, s"${q.name}.txt"),
+            df.queryExecution.explainString(ExplainMode.fromString("formatted")))
+        }
         val plan = df.queryExecution.executedPlan match {
           case a: AdaptiveSparkPlanExec => a.executedPlan
           case p => p
@@ -186,10 +195,6 @@ object Explain {
           println(f"${q.name}%-28s ERROR ${e.getMessage.take(80)}"); flagged += 1
       }
     }
-    spark.stop()
-    if (flagged > 0) {
-      System.err.println(s"[explain] $flagged queries flagged")
-      sys.exit(1)
-    }
+    flagged
   }
 }

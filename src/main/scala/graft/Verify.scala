@@ -1,63 +1,30 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import com.fasterxml.jackson.databind.ObjectMapper
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+import scala.jdk.CollectionConverters._
+/** Driver-run correctness dump: each registry query's result → parquet,
+  * plus oracle_sql.json, for the driver's DuckDB compare. The session is
+  * Bench's ([[Graft.local]]), so the oracle checks the configuration the
+  * bench measures; `SPARK_GRAFT_CONF` with the four local-tier budgets
+  * set to 0 forces every operator's distributed shape through the same
+  * gate. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // don't let retained per-execution plan strings (some huge) pile
-      // up on the driver heap across 200+ queries — see Bench
-      .config("spark.sql.ui.retainedExecutions", "16")
-      .config("spark.sql.streaming.minBatchesToRetain", "2")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_CONF="k=v;k=v" — session confs for this pass (the
-    // PlanDump contract). Used by the tier-off oracle run: setting the
-    // four local-tier budgets to 0 forces every operator's DISTRIBUTED
-    // shape through the same correctness gate (VERDICT r12 #3).
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.nonEmpty)
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k.trim, v.trim)
-      })
+    val spark = Graft.local()
     new java.io.File(outDir).mkdirs()
-    // Optional local-debug filter: SPARK_GRAFT_ONLY="a,b" runs a subset.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    Graft.selected.foreach { q =>
+      try q.fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${q.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
       }
       // queries are independent by contract — drop whatever cache
       // blocks this one left behind before the next starts
       spark.catalog.clearCache()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      new ObjectMapper().writeValueAsString(SparkEntry.oracleSql.asJava))
     spark.stop()
   }
 }

@@ -1,8 +1,7 @@
 package graft.cli
 
-import graft.{JoinConfig, JoinStrategy}
+import graft.{Graft, JoinConfig, JoinStrategy}
 import graft.operators.Joins
-import org.apache.spark.sql.SparkSession
 
 /** CLI mirroring the reference's three entry points
   * (RepartitionJoin.main / BroadcastJoin.main / MergeJoin.main,
@@ -33,14 +32,8 @@ object JoinCli {
       case "--partitions" :: v :: t => cfg = cfg.copy(partitions = Some(v.toInt)); t
       case other :: _ => throw new IllegalArgumentException(s"unknown option: $other")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-join")
-      .config("spark.sql.shuffle.partitions", cfg.partitions.getOrElse(cpus.toInt).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.local(conf = cfg.partitions
+      .map(p => Map("spark.sql.shuffle.partitions" -> p.toString)).getOrElse(Map.empty))
     val out = Joins.runCsvJoin(spark, cfg)
     println(s"[graft] join complete: ${out.count()} rows -> ${cfg.output.get}")
     spark.stop()

@@ -81,7 +81,12 @@ final case class JoinStats(
     outputRecords: Long,
     shuffleRecordsWritten: Long,
     shuffleBytesWritten: Long,
-    taskDurationsMs: Seq[Long]) {
+    taskDurationsMs: Seq[Long],
+    jobs: Int,
+    stages: Int,
+    shuffleBytesRead: Long,
+    taskRunMs: Long,
+    taskGcMs: Long) {
   def taskTimeMeanMs: Double =
     if (taskDurationsMs.isEmpty) -1.0 else taskDurationsMs.sum.toDouble / taskDurationsMs.size
   def taskTimeMedianMs: Double =
@@ -92,4 +97,9 @@ final case class JoinStats(
       if (n % 2 == 1) s(n / 2).toDouble else (s(n / 2 - 1) + s(n / 2)) / 2.0
     }
   def taskTimeMaxMs: Long = if (taskDurationsMs.isEmpty) -1L else taskDurationsMs.max
+  /** The counters as flat JSON fields, for one-line records. */
+  def countersJson: String =
+    f""""jobs":$jobs,"stages":$stages,"tasks":${taskDurationsMs.size},""" +
+      f""""shuf_write_mb":${shuffleBytesWritten / 1e6}%.1f,"shuf_read_mb":${shuffleBytesRead / 1e6}%.1f,""" +
+      s""""task_run_ms":$taskRunMs,"task_gc_ms":$taskGcMs"""
 }

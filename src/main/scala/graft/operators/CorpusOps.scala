@@ -860,15 +860,14 @@ object CorpusOps {
     * cached plan NESTED in the logical tree, and per-round plan
     * processing grows superlinearly with learned merges (measured: a
     * 24-merge train spent minutes in plan-string generation alone).
-    * The superseded round's blocks are freed explicitly. BpeScale
-    * measures the realized batch factor at ≥ 1 k merges
-    * (docs/EXPERIMENTS.md). */
+    * The superseded round's blocks are freed explicitly. The realized
+    * batch factor at ≥ 1 k merges is in docs/EXPERIMENTS.md. */
   def bpeTrain(docs: DataFrame, text: Column, nMerges: Int,
       batch: Int = 16): DataFrame =
     bpeTrainWithRounds(docs, text, nMerges, batch)._1
 
   /** [[bpeTrain]] plus the realized ROUND count — the batching
-    * effectiveness measure BpeScale reports (merges/rounds = mean
+    * effectiveness measure (merges/rounds = mean
     * batch factor; 1.0 means the corpus's hot pairs all chain). */
   private[graft] def bpeTrainWithRounds(docs: DataFrame, text: Column,
       nMerges: Int, batch: Int = 16): (DataFrame, Int) = {

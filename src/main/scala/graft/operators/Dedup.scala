@@ -454,8 +454,8 @@ object Dedup {
   }
 
   /** Write [[incrementalIndex]] to storage in its SERVING layout — the
-    * scale path for a standing ingest gate. The round-4 DedupScale probe
-    * measured the cached-index plan degrading from ~3 s to ~50-57 s
+    * scale path for a standing ingest gate. The round-4 dedup scale
+    * probe measured the cached-index plan degrading from ~3 s to ~50-57 s
     * per ingest past ~1 M corpus docs (~75 M index rows): once the
     * in-memory index spills, every delta pays a cache-thrash scan of
     * the whole corpus index — warm runs got SLOWER than cold ones.

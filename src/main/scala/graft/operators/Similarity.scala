@@ -39,10 +39,6 @@ final case class TfidfStaleness(appendedDocs: Long, statN: Long,
   /** Delta term occurrences skipped as OOV, per million. */
   def oovMassPpm: Long =
     if (totalTf == 0L) 0L else oovTf * 1000000L / totalTf
-  /** The per-term idf drift bound appendToTfidfIndex states:
-    * ≤ log10((n + d) / n). */
-  def idfDriftBound: Double =
-    math.log10((statN + appendedDocs).toDouble / math.max(1L, statN).toDouble)
 }
 
 // Serializable: the task-local seed/walk tiers close over the scalar
@@ -628,7 +624,7 @@ object Similarity extends Serializable {
     * (random-shingle probe: ~29 M distinct terms at 500 k docs;
     * force-broadcasting it was measured at 4× the whole append, and
     * leaving the join unhinted planned a 10 s SMJ on a tiny delta —
-    * TfidfScale / bench-phase, docs/EXPERIMENTS.md round 17). */
+    * `graft.Scale tfidf` / bench-phase, docs/EXPERIMENTS.md round 17). */
   private def unitVectors(tok: DataFrame, idf: DataFrame,
       broadcastSide: String = "idf"): DataFrame = {
     val w = (if (broadcastSide == "tok") broadcast(tok) else tok)

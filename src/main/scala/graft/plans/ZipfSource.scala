@@ -155,8 +155,8 @@ object ZipfStrategy extends SparkStrategy {
   }
 }
 
-/** Session extension wiring — `SparkSession.builder()
-  * .withExtensions(new GraftExtensions)` (or the
+/** Session extension wiring — a builder's
+  * `.withExtensions(new GraftExtensions)` (or the
   * `spark.sql.extensions=graft.plans.GraftExtensions` conf) registers
   * the planner strategy and graft's SQL functions in every session. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

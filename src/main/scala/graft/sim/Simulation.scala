@@ -457,15 +457,8 @@ object Simulation {
 
   def main(argv: Array[String]): Unit = {
     val a = parse(argv)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-sim")
-      .config("spark.sql.shuffle.partitions", a.reducers.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Graft.local(
+      conf = Map("spark.sql.shuffle.partitions" -> a.reducers.toString))
     run(spark, a)
     spark.stop()
   }

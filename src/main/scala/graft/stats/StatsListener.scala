@@ -1,7 +1,8 @@
 package graft.stats
 
 import graft.JoinStats
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
@@ -16,19 +17,35 @@ import scala.collection.mutable
   *    JoinSimulation.java:161-162)
   *  - wall time       ← nanoTime around the action
   *    (≙ JobUtils.time, JobUtils.java:17-31)
+  *  - jobs, stages, shuffle read, executor run and GC time — the cost
+  *    split Bench's `[bench-query]` and `graft.Scale` lines report
   */
 class StatsListener extends SparkListener {
   private val durations = mutable.ArrayBuffer.empty[Long]
+  private var jobs = 0
+  private var stages = 0
   private var shuffleRecords = 0L
   private var shuffleBytes = 0L
+  private var shuffleReadBytes = 0L
   private var outputRecords = 0L
+  private var runMs = 0L
+  private var gcMs = 0L
+
+  override def onJobStart(j: SparkListenerJobStart): Unit = synchronized { jobs += 1 }
+
+  override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+    synchronized { stages += 1 }
 
   override def onTaskEnd(t: SparkListenerTaskEnd): Unit = synchronized {
     if (t.taskInfo != null && t.taskMetrics != null) {
+      val m = t.taskMetrics
       durations += (t.taskInfo.finishTime - t.taskInfo.launchTime)
-      shuffleRecords += t.taskMetrics.shuffleWriteMetrics.recordsWritten
-      shuffleBytes += t.taskMetrics.shuffleWriteMetrics.bytesWritten
-      outputRecords += t.taskMetrics.outputMetrics.recordsWritten
+      shuffleRecords += m.shuffleWriteMetrics.recordsWritten
+      shuffleBytes += m.shuffleWriteMetrics.bytesWritten
+      shuffleReadBytes += m.shuffleReadMetrics.totalBytesRead
+      outputRecords += m.outputMetrics.recordsWritten
+      runMs += m.executorRunTime
+      gcMs += m.jvmGCTime
     }
   }
 
@@ -39,7 +56,12 @@ class StatsListener extends SparkListener {
       outputRecords = outputRecords,
       shuffleRecordsWritten = shuffleRecords,
       shuffleBytesWritten = shuffleBytes,
-      taskDurationsMs = durations.toSeq)
+      taskDurationsMs = durations.toSeq,
+      jobs = jobs,
+      stages = stages,
+      shuffleBytesRead = shuffleReadBytes,
+      taskRunMs = runMs,
+      taskGcMs = gcMs)
   }
 }
 

@@ -1337,8 +1337,8 @@ object Streaming {
           // Free exactly those once the sink append consumed them —
           // at depth (1000s of micro-batches) even bounded per-batch
           // results are an unbounded block-manager residue (VERDICT
-          // r11 #3's scaling question; StreamScale measures the
-          // depth-10+ profile, SimStreamSpec pins zero growth)
+          // r11 #3's scaling question; a 12-batch depth probe measured
+          // flat residency, SimStreamSpec pins zero growth)
           val sc = batch.sparkSession.sparkContext
           val before = sc.getPersistentRDDs.keySet
           graft.operators.Similarity
@@ -1446,7 +1446,7 @@ object Streaming {
     // ingests run against for months — rebuilding it per invocation
     // would time a corpus-sized batch job inside what is contractually
     // the delta-bound ingest path (the build cost itself is measured by
-    // dedup_incremental and the DedupScale stored-mode probes). The key
+    // dedup_incremental and `graft.Scale dedup` stored mode). The key
     // is (sfDir, source length+mtime, layout version), so driver
     // testdata regeneration or an index-layout change auto-invalidates.
     val idxKey = java.security.MessageDigest.getInstance("MD5")

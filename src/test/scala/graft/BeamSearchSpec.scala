@@ -214,7 +214,7 @@ class BeamSearchSpec extends SparkSpec {
 
   test("NN-Descent refinement: recall lifts on planted clusters, edge quality is monotone, exact graph is a fixed point") {
     import org.apache.spark.sql.DataFrame
-    // planted clusters (the AnnScale generator, small), quantized into
+    // planted clusters (the `graft.Scale ann` generator, small), quantized into
     // cells FINER than the clusters (96 cells over 24 clusters): a
     // cluster's true neighborhood straddles cell boundaries, which is
     // exactly the recall gap blocked construction has at corpus scale.

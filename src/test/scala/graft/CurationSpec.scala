@@ -296,11 +296,17 @@ class CurationSpec extends SparkSpec {
       (1L, "alpha beta gamma beta"),
       (2L, "delta epsilon zeta delta"),
       (3L, "eta theta iota eta theta")).toDF("doc_id", "text")
-    val w = Curation.importanceWeights(raw, target, col("text"), col("doc_id"))
-      .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    assert(w(1L) > w(2L) && w(1L) > w(3L),
-      s"on-domain doc must outrank off-domain: $w")
-    assert(w(2L) < 0 && w(3L) < 0, "off-domain docs carry negative evidence")
+    // the hashed form at the scale probe's 2^22 buckets must select the
+    // planted lookalike the same way
+    for (weights <- Seq(
+        Curation.importanceWeights(raw, target, col("text"), col("doc_id")),
+        Curation.importanceWeightsHashed(raw, target, col("text"), col("doc_id"),
+          buckets = 1 << 22))) {
+      val w = weights.collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
+      assert(w(1L) > w(2L) && w(1L) > w(3L),
+        s"on-domain doc must outrank off-domain: $w")
+      assert(w(2L) < 0 && w(3L) < 0, "off-domain docs carry negative evidence")
+    }
   }
 
   test("hashed DSIR weights are bit-equal to exact weights when buckets are injective here") {

@@ -81,4 +81,45 @@ class GraftFacadeSpec extends SparkSpec {
   test("query lookup returns runnable operators") {
     assert(Graft.query("join_shuffle")(spark, sf).count() > 0)
   }
+
+  test("SPARK_GRAFT_CONF parser: key=value entries, '=' inside values, malformed entry named") {
+    assert(Graft.parseConf(" a.b = 1 ;;c=x=y; ") == Map("a.b" -> "1", "c" -> "x=y"))
+    assert(Graft.parseConf("") == Map.empty)
+    for (bad <- Seq("a=1;spark.graft.x", "=1")) {
+      val e = intercept[IllegalArgumentException](Graft.parseConf(bad))
+      assert(e.getMessage.contains(s"'${bad.split(";").last}'"), e.getMessage)
+    }
+  }
+
+  test("Graft.local carries the bench settings; caller conf overrides them") {
+    val s = Graft.settings(3, Map("spark.app.name" -> "x"))
+    assert(s("spark.master") == "local[3]" && s("spark.sql.shuffle.partitions") == "3")
+    assert(s("spark.app.name") == "x")
+    // the suites' own session comes from the same factory: Verify and
+    // Bench now see the identical configuration
+    for ((k, v) <- Seq(
+        "spark.sql.adaptive.enabled" -> "true",
+        "spark.sql.session.timeZone" -> "UTC",
+        "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+        "spark.ui.enabled" -> "false",
+        "spark.sql.ui.retainedExecutions" -> "16",
+        "spark.ui.retainedJobs" -> "100",
+        "spark.ui.retainedStages" -> "100",
+        "spark.ui.retainedTasks" -> "1000",
+        "spark.sql.streaming.minBatchesToRetain" -> "2")) {
+      assert(s(k) == v, k)
+      assert(spark.conf.get(k) == v, k)
+    }
+  }
+
+  test("Explain's plan dump writes one formatted plan per audited query") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_plans").toFile
+    val flagged = Explain.audit(spark, sf,
+      SparkEntry.registry.filter(_.name == "join_shuffle"), Some(dir.getPath))
+    assert(flagged == 0)
+    assert(dir.list().toSeq == Seq("join_shuffle.txt"))
+    val plan = new String(java.nio.file.Files.readAllBytes(
+      new java.io.File(dir, "join_shuffle.txt").toPath), "UTF-8")
+    assert(plan.contains("Physical Plan"), plan.take(200))
+  }
 }

@@ -6,20 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for all suites (one JVM-wide session; suites run
   * in one forked JVM under `Test / fork := true`). */
 object SparkSpec {
-  lazy val spark: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Graft.local(4, Map("spark.sql.warehouse.dir" ->
+    java.nio.file.Files.createTempDirectory("graft_wh").toString))
   val sf: String = "/root/testdata/sf0.001"
 }
 

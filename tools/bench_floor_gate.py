@@ -19,9 +19,12 @@ Usage:
 - Sub-floor times (NEW faster) always pass.
 - Tiny floors are noise-dominated: queries under MIN_SEC on both sides
   are exempt from the ratio gate.
+- A NEW record whose flat `failed` field names any query fails: a query
+  that threw is timed like one that ran, so its time is no floor.
 
-Exit 0 = clean; exit 1 = drift without an EXPERIMENTS.md explanation —
-either fix the regression or document the cause and re-baseline.
+Exit 0 = clean; exit 1 = a failed or missing query, or drift without an
+EXPERIMENTS.md explanation — either fix the regression or document the
+cause and re-baseline.
 """
 import json
 import subprocess
@@ -30,11 +33,9 @@ import sys
 MIN_SEC = 0.5
 
 
-def load_queries(blob):
+def load_record(blob):
     d = json.loads(blob)
-    if "best_of_2" in d:
-        d = d["best_of_2"]
-    return d["queries"]
+    return d.get("best_of_2", d)
 
 
 def main():
@@ -53,15 +54,17 @@ def main():
     if not args:
         print(__doc__)
         return 2
-    new = load_queries(open(args[0]).read())
+    record = load_record(open(args[0]).read())
+    new = record["queries"]
+    failed = [q for q in record.get("failed", "").split(",") if q]
     if len(args) > 1:
-        base = load_queries(open(args[1]).read())
+        base = load_record(open(args[1]).read())["queries"]
     else:
         blob = subprocess.check_output(
             ["git", "show", "HEAD:bench_local.json"],
             cwd=subprocess.check_output(
                 ["git", "rev-parse", "--show-toplevel"]).decode().strip())
-        base = load_queries(blob)
+        base = load_record(blob)["queries"]
 
     # mechanical regime adjudication (VERDICT r9 #7): the per-query
     # ratio distribution tells contamination apart from regressions —
@@ -83,7 +86,8 @@ def main():
             verdict = f"clean (median ratio {median:.2f}x, max {ratios[-1]:.2f}x)"
         print(f"[bench-floor-gate] verdict: {verdict}")
 
-    failures, news = [], []
+    failures = [f"FAILED   {q}: the query threw during the run" for q in failed]
+    news = []
     for q, b in sorted(base.items()):
         if q not in new:
             failures.append(f"MISSING  {q}: in baseline ({b:.2f}s) but not in the new run")
@@ -101,8 +105,9 @@ def main():
     if failures:
         for line in failures:
             print(line)
-        print(f"\n[bench-floor-gate] {len(failures)} regression(s) over {drift}x — "
-              "explain in docs/EXPERIMENTS.md or fix before re-baselining")
+        print(f"\n[bench-floor-gate] {len(failures)} failed, missing or over-{drift}x "
+              "queries — fix them, or explain the drift in docs/EXPERIMENTS.md "
+              "before re-baselining")
         return 1
     print(f"[bench-floor-gate] clean: {len(base)} baselined queries within "
           f"{drift}x of their floors, {len(news)} new")
