@@ -79,6 +79,30 @@ object Graft {
     spark
   }
 
+  /** Run `body` with `confs` set on `spark`, then put every key back:
+    * a key that had a value gets it again, a key that had none is
+    * unset — on a normal return and when `body` throws. The one
+    * save/set/restore in the engine: library code that needs a setting
+    * for the length of one operator takes it from here.
+    *
+    * Contract: a session conf is SESSION-WIDE. While `body` runs, every
+    * thread using the same session sees the override (and a second
+    * scoped override of the same key on another thread would restore
+    * over it), so drive one session from one thread while a scoped
+    * override is active; concurrent drivers each take their own
+    * session (`spark.newSession()`). */
+  def withConfs[A](spark: SparkSession, confs: (String, String)*)(body: => A): A = {
+    // the explicitly set keys: `conf.getOption` would report a built-in
+    // default for an unset key, and restoring that would pin it
+    val set = spark.conf.getAll
+    val prev = confs.map { case (k, _) => k -> set.get(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach { case (k, vo) =>
+      vo.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+  }
+
   /** [[local]] with graft's SQL functions and planner strategies installed. */
   def session(): SparkSession = configure(local())
 

@@ -54,9 +54,11 @@ object Scale {
     Console.out.flush()
   }
 
-  /** A planted-answer self-check line. */
-  def check(op: String, expected: Long, got: Long): Unit =
-    emit(s""""op":"$op","expected":$expected,"got":$got,"ok":${expected == got}""")
+  /** A planted-answer self-check line. With `nonZero`, an expected 0
+    * fails too: a count whose plant did not take would compare 0 with 0. */
+  def check(op: String, expected: Long, got: Long, nonZero: Boolean = false): Unit =
+    emit(s""""op":"$op","expected":$expected,"got":$got,""" +
+      s""""ok":${expected == got && (!nonZero || expected > 0)}""")
 
   def main(args: Array[String]): Unit = {
     val family: (SparkSession, Args) => Unit = args.headOption match {
@@ -393,10 +395,12 @@ object Scale {
         s"j -> concat('w', pmod(xxhash64(($seed) * $tpd + j), 10000))))")
     val (docs, _, _) = Iterate.ckpt(
       spark.range(nDocs).select(col("id").as("doc_id"), text("id").as("text")))
+    // even delta docs repeat a corpus text, so their shingles are in the
+    // stored vocabulary and the frozen append has postings to write
     val nDelta = 2000L
     val (delta, _, _) = Iterate.ckpt(
       spark.range(nDelta).select((col("id") + nDocs).as("doc_id"),
-        text(s"id + $nDocs").as("text")))
+        text(s"if(id % 2 = 0, id % $nDocs, id + $nDocs)").as("text")))
 
     val idx = Tables.scratchDir("graft_tfidf_scale")
     timed("index_build") {
@@ -414,13 +418,14 @@ object Scale {
       s""""stat_n":${stale.statN},"growth_ppm":${stale.growthPpm},""" +
       s""""oov_mass_ppm":${stale.oovMassPpm}""")
     // the frozen contract indexes exactly the delta's IN-VOCABULARY
-    // terms (novel shingles wait for the refresh) — with random-text
-    // 3-shingles most delta shingles are novel, so the expectation is
-    // the vocabulary join, not the raw delta term count
+    // terms (novel shingles wait for the refresh) — the odd delta docs'
+    // random-text 3-shingles are mostly novel, so the expectation is the
+    // vocabulary join, not the raw delta term count
     check("append_check",
       termsOf(delta).select("doc_id", "t").distinct()
         .join(spark.read.parquet(s"$idx/idf").select("t"), "t").count(),
-      spark.read.parquet(s"$idx/postings").filter(col("doc_id") >= nDocs).count())
+      spark.read.parquet(s"$idx/postings").filter(col("doc_id") >= nDocs).count(),
+      nonZero = true)
     timed("refresh_stats") {
       Similarity.refreshTfidfIndex(spark, idx)
       spark.catalog.clearCache(); 0L

@@ -618,7 +618,7 @@ object Dedup {
     // the same HALF_UP rounding (DedupSpec pins gate tier equality).
     // Past the budget — the 100 TB regime — the partition-pruned
     // distributed gate below is unchanged.
-    if (localGateEligible(spark, path))
+    if (Tier.localStore(spark, "incrementalDedupStored", Tier.DedupGateBytes, path))
       return incrementalDedupStoredLocal(spark, path, delta, text, id,
         threshold, k, numHashes, rows, bandBuckets, docBuckets)
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
@@ -656,28 +656,6 @@ object Dedup {
           .localCheckpoint(true)
       } finally cands.unpersist(): Unit
     } finally { deltaBands.unpersist(); shDelta.unpersist(): Unit }
-  }
-
-  private def dirBytes(f: java.io.File): Long =
-    if (!f.exists()) 0L
-    else if (f.isFile) f.length()
-    else {
-      val c = f.listFiles()
-      if (c == null) 0L else c.foldLeft(0L)((a, x) => a + dirBytes(x))
-    }
-
-  private[graft] def localGateEligible(spark: SparkSession, path: String): Boolean = {
-    val budget = spark.conf.getOption("spark.graft.dedup.localGateBytes")
-      .map(_.toLong).getOrElse(64L << 20)
-    // fail CLOSED on anything that is not a readable local directory
-    // (hdfs://, s3://, missing stores): an unsizable index must take the
-    // distributed gate, never be collected on a 0-byte misread
-    // (VERDICT r12 #2)
-    val bands = new java.io.File(s"$path/bands")
-    val sh = new java.io.File(s"$path/shingles")
-    budget > 0L &&
-      bands.isDirectory && bands.canRead && sh.isDirectory && sh.canRead &&
-      dirBytes(bands) + dirBytes(sh) <= budget
   }
 
   /** [[incrementalDedupStored]]'s memory-resident tier — see the gate
@@ -854,11 +832,8 @@ object Dedup {
     // the log n distributed rounds remain the over-budget path (their
     // convergence pin forces the conf to 0). incrementalConnected-
     // Components inherits the tier through its contracted-graph CC.
-    val localBudget = spark.conf.getOption("spark.graft.cc.localEdges")
-      .map(_.toLong).getOrElse(2000000L)
-    if (eCount <= localBudget &&
-        e.schema.fields.forall(_.dataType ==
-          org.apache.spark.sql.types.LongType)) {
+    if (e.schema.fields.forall(_.dataType == org.apache.spark.sql.types.LongType) &&
+        Tier.local(spark, "connectedComponents", Tier.CcEdges, eCount)) {
       import spark.implicits._
       val es = e.as[(Long, Long)].collect()
       eRdd.unpersist(blocking = false): Unit

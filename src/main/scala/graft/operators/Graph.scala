@@ -26,20 +26,6 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Driver edge budget for the LOCAL iteration tier (optimization
-    * r12): at or below it, a fixed-point operator's rounds run over
-    * the collected edge list instead of per-round join/aggregate
-    * exchanges — legitimate because every round here is integral and
-    * order-free by the determinism contract, so the scalar replay is
-    * bit-identical to the distributed rounds (GraphSpec pins each).
-    * `spark.graft.graph.localEdges` overrides (0 disables); default
-    * 4 M edges ≈ tens of MB on the driver — the broadcast class. A
-    * 100 TB edge list exceeds it by orders of magnitude and keeps the
-    * Pregel-style distributed rounds. */
-  private def localEdgeBudget(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption("spark.graft.graph.localEdges")
-      .map(_.toLong).getOrElse(4000000L)
-
   private def allLong(df: DataFrame, cols: String*): Boolean =
     cols.forall(c =>
       df.schema(c).dataType == org.apache.spark.sql.types.LongType)
@@ -96,7 +82,8 @@ object Graph {
     // (GraphSpec pins local ≡ distributed), and the per-round
     // join + aggregate + join exchanges vanish. Past the budget the
     // Pregel-style rounds below are unchanged — the 100 TB shape.
-    if (nEdges <= localEdgeBudget(spark) && allLong(edC, "src", "dst")) {
+    val op = if (sources.isEmpty) "pageRank" else "personalizedPageRank"
+    if (allLong(edC, "src", "dst") && Tier.local(spark, op, Tier.GraphEdges, nEdges)) {
       import spark.implicits._
       val rows = edC.select(col("src"), col("dst"), col("outdeg"))
         .as[(Long, Long, Long)].collect()
@@ -312,9 +299,9 @@ object Graph {
     // wins ~2×. The src placement below still applies in both modes.
     val (eC, eRdd, nE) = Iterate.ckpt(edges.select(col("src"), col("dst")))
     val spark0 = edges.sparkSession
-    // local tier (see [[localEdgeBudget]]): hop distances are integers
+    // local tier (see [[Tier.GraphEdges]]): hop distances are integers
     // under an order-free min — the scalar BFS is bit-identical
-    if (nE <= localEdgeBudget(spark0) && allLong(eC, "src", "dst")) {
+    if (allLong(eC, "src", "dst") && Tier.local(spark0, "bfs", Tier.GraphEdges, nE)) {
       import spark0.implicits._
       val adj = eC.select(col("src"), col("dst")).as[(Long, Long)].collect()
         .groupBy(_._1).map { case (s, a) => s -> a.map(_._2) }
@@ -382,9 +369,10 @@ object Graph {
     // unpinned like [[bfs]] — per-seed frontiers collapse the same way
     val (eC, eRdd, nE) = Iterate.ckpt(edges.select(col("src"), col("dst")))
     val spark0 = edges.sparkSession
-    // local tier (see [[localEdgeBudget]]): per-seed BFS, bit-identical
+    // local tier (see [[Tier.GraphEdges]]): per-seed BFS, bit-identical
     // to the keyed min-merge rounds for the same reason [[bfs]]'s is
-    if (nE <= localEdgeBudget(spark0) && allLong(eC, "src", "dst")) {
+    if (allLong(eC, "src", "dst") &&
+        Tier.local(spark0, "multiSourceHops", Tier.GraphEdges, nE)) {
       import spark0.implicits._
       val adj = eC.select(col("src"), col("dst")).as[(Long, Long)].collect()
         .groupBy(_._1).map { case (s, a) => s -> a.map(_._2) }
@@ -471,11 +459,11 @@ object Graph {
   def sssp(edges: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = {
     val (eC, eRdd, nE) = Iterate.ckpt(edges.select(col("src"), col("dst"), col("w")))
     val spark0 = edges.sparkSession
-    // local tier (see [[localEdgeBudget]]): exact BIGINT distances
+    // local tier (see [[Tier.GraphEdges]]): exact BIGINT distances
     // under an order-free min — the scalar frontier relaxation is
     // bit-identical to the keyed min-merge rounds, including the
     // improved-flag semantics (a tie keeps the settled distance)
-    if (nE <= localEdgeBudget(spark0) && allLong(eC, "src", "dst", "w")) {
+    if (allLong(eC, "src", "dst", "w") && Tier.local(spark0, "sssp", Tier.GraphEdges, nE)) {
       import spark0.implicits._
       val adj = eC.select(col("src"), col("dst"), col("w"))
         .as[(Long, Long, Long)].collect()
@@ -588,11 +576,12 @@ object Graph {
     val B = 4294967296L // 2^32: pack (cnt, label) monotonically
     val (eC, eRdd, nE) = Iterate.ckpt(edges.select(col("src"), col("dst")))
     val spark0 = edges.sparkSession
-    // local tier (see [[localEdgeBudget]]): the synchronous update with
+    // local tier (see [[Tier.GraphEdges]]): the synchronous update with
     // the (count DESC, label ASC) tie order is a pure function of the
     // graph — the scalar replay uses the SAME monotonic packing, so
     // labels are bit-identical to the keyed aggregate rounds
-    if (nE <= localEdgeBudget(spark0) && allLong(eC, "src", "dst")) {
+    if (allLong(eC, "src", "dst") &&
+        Tier.local(spark0, "labelPropagation", Tier.GraphEdges, nE)) {
       import spark0.implicits._
       val rows = eC.select(col("src"), col("dst")).as[(Long, Long)].collect()
       eRdd.unpersist(blocking = false): Unit
@@ -678,9 +667,9 @@ object Graph {
     // tasks win (the CC A/B at 10 M edges, docs/EXPERIMENTS.md r13)
     var (e, eRdd, nE0) = Iterate.ckpt(edges.select(col("src"), col("dst")))
     val spark0 = edges.sparkSession
-    // local tier (see [[localEdgeBudget]]): peeling is a pure set
+    // local tier (see [[Tier.GraphEdges]]): peeling is a pure set
     // fixpoint (degree counts and semi-joins), bit-identical locally
-    if (nE0 <= localEdgeBudget(spark0) && allLong(e, "src", "dst")) {
+    if (allLong(e, "src", "dst") && Tier.local(spark0, "kCore", Tier.GraphEdges, nE0)) {
       import spark0.implicits._
       var rows = e.select(col("src"), col("dst")).as[(Long, Long)].collect()
       eRdd.unpersist(blocking = false): Unit

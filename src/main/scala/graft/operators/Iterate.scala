@@ -31,39 +31,15 @@ object Iterate {
     * [[ckpt]]) then never matches the next round's requirement and
     * every round re-shuffles the big side (edges) again. Disabling
     * coalescing inside the operator makes every round's exchange land
-    * at exactly `spark.sql.shuffle.partitions`
-    * (`spark.graft.graph.roundShufflePartitions` overrides when > 0),
-    * so the edge checkpoint's partitioning satisfies the per-round
-    * join requirement and only the (small) state vector moves.
+    * at exactly `spark.sql.shuffle.partitions`, so the edge
+    * checkpoint's partitioning satisfies the per-round join
+    * requirement and only the (small) state vector moves.
     * Scale-adaptive by construction: the width is the deployment's
-    * own shuffle-partition setting, not a constant. Restores the confs
-    * on exit. */
-  def pinnedRounds[A](spark: org.apache.spark.sql.SparkSession)(body: => A): A = {
-    // kill-switch for A/B plan evidence and spec coverage of the
-    // unpinned shape: spark.graft.graph.pinRounds=false runs the body
-    // under the session's ambient AQE settings
-    if (spark.conf.getOption("spark.graft.graph.pinRounds").contains("false"))
-      return body
-    val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
-    val partsKey = "spark.sql.shuffle.partitions"
-    val width = spark.conf.getOption("spark.graft.graph.roundShufflePartitions")
-      .map(_.toInt).getOrElse(0)
-    val prevCoalesce = spark.conf.getOption(coalesceKey)
-    val prevParts = spark.conf.getOption(partsKey)
-    spark.conf.set(coalesceKey, "false")
-    if (width > 0) spark.conf.set(partsKey, width.toString)
-    try body
-    finally {
-      prevCoalesce match {
-        case Some(v) => spark.conf.set(coalesceKey, v)
-        case None => spark.conf.unset(coalesceKey)
-      }
-      if (width > 0) prevParts match {
-        case Some(v) => spark.conf.set(partsKey, v)
-        case None => spark.conf.unset(partsKey)
-      }
-    }
-  }
+    * own shuffle-partition setting, not a constant. Scoped through
+    * [[graft.Graft.withConfs]], so the setting is restored on exit. */
+  def pinnedRounds[A](spark: org.apache.spark.sql.SparkSession)(body: => A): A =
+    graft.Graft.withConfs(spark,
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")(body)
 
   /** Debug hook (plans/ evidence for the iterative operators, whose
     * RETURNED frame is a checkpoint leaf that hides the per-round

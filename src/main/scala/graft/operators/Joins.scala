@@ -194,18 +194,6 @@ object Joins {
       .bucketBy(buckets, key).sortBy(key).saveAsTable(table)
   }
 
-  /** Set session confs for the duration of `f`, restoring previous
-    * values (or unsetting) afterwards — the leak-free pattern ADVICE
-    * round 2 asked for on the streaming side, reused here. */
-  def withSessionConfs[A](spark: SparkSession, confs: (String, String)*)(f: => A): A = {
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f
-    finally prev.foreach { case (k, vo) =>
-      vo.fold(spark.conf.unset(k))(spark.conf.set(k, _))
-    }
-  }
-
   /** Confs that let Catalyst's InjectRuntimeFilter fire at test scale:
     * the rule is on by default but gated on a ≥10 GB application-side
     * scan, which local testdata never reaches. At real scale only the
@@ -224,7 +212,7 @@ object Joins {
     * scan — at 100 TB this drops the shuffled fact volume to roughly
     * the join's selectivity BEFORE the exchange, which a plain
     * shuffle join only achieves after moving every row. Caller must run
-    * this (plan + execute) inside [[withSessionConfs]]([[bloomFilterConfs]]). */
+    * this (plan + execute) inside [[graft.Graft.withConfs]]([[bloomFilterConfs]]). */
   def bloomPrunedJoin(fact: DataFrame, dim: DataFrame, fk: Column, dk: Column): DataFrame =
     fact.join(dim, fk === dk, "inner")
 
@@ -271,58 +259,18 @@ object Joins {
     * future work: the reference only ever measures binary joins): one
     * fact joined to n dimension tables. The cascade decision is a
     * GREEDY KNAPSACK over the shared executor-memory budget — dims
-    * admitted to broadcast in (bytes ASC, name) order while the
-    * RUNNING TOTAL fits (broadcasts are resident simultaneously in a
-    * cascade, so the budget is cumulative, not per-relation the way
-    * `autoBroadcastJoinThreshold` meters it):
+    * admitted to broadcast (`dim_broadcast`) in (bytes ASC, name) order
+    * while the RUNNING TOTAL fits (broadcasts are resident
+    * simultaneously in a cascade, so the budget is cumulative, not
+    * per-relation the way `autoBroadcastJoinThreshold` meters it). The
+    * overall `advice` is `broadcast-cascade` when every dim is
+    * admitted, `shuffle-cascade` when none is, `mixed-cascade`
+    * otherwise (broadcast the admitted dims first, then shuffle the
+    * rest).
     *
-    *  - every dim admitted  → `broadcast-cascade` (one fact scan,
-    *    zero shuffles — the multiway sweep measures this fastest
-    *    whenever it is feasible);
-    *  - no dim admitted     → `shuffle-cascade` (each join exchanges
-    *    the surviving fact side on its key);
-    *  - otherwise           → `mixed-cascade` (broadcast the admitted
-    *    dims FIRST — each is free fact-side reduction — then shuffle
-    *    the rest).
-    *
-    * All arithmetic integer (rows × bytes), the running total a window
-    * sum over the n-row dim relation — any engine computes identical
-    * advice. Returns one row PER DIM with its admission flag plus the
-    * overall advice. */
-  def adviseMultiway(name: String, fact: DataFrame,
-      dims: Seq[(String, DataFrame)], rowBytes: Long,
-      broadcastBudgetBytes: Long): DataFrame = {
-    require(dims.nonEmpty, "adviseMultiway needs at least one dim")
-    val factRows = fact.agg(count(lit(1)).as("fact_rows"))
-    val dimCounts = dims.map { case (dn, df) =>
-      df.agg(lit(dn).as("dim_name"), count(lit(1)).as("dim_rows"))
-    }.reduce(_ unionByName _)
-    // n-row relation: the global window is over the dim COUNT, never data
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("dim_bytes"), col("dim_name"))
-    val flagged = dimCounts
-      .withColumn("dim_bytes", col("dim_rows") * rowBytes)
-      .withColumn("cum", sum(col("dim_bytes")).over(w))
-      .withColumn("dim_broadcast",
-        (col("cum") <= broadcastBudgetBytes).cast("int"))
-    val overall = flagged.agg(
-      min(col("dim_broadcast")).as("__all"), max(col("dim_broadcast")).as("__any"))
-    flagged
-      .join(broadcast(factRows), lit(true))
-      .join(broadcast(overall), lit(true))
-      .select(
-        lit(name).as("join_name"),
-        col("dim_name"), col("dim_rows"), col("dim_bytes"),
-        col("fact_rows"), col("dim_broadcast"),
-        when(col("__all") === 1, "broadcast-cascade")
-          .when(col("__any") === 0, "shuffle-cascade")
-          .otherwise("mixed-cascade").as("advice"))
-  }
-
-  /** [[adviseMultiway]] + a per-join-key SKEW probe (VERDICT r8 #4 —
-    * the multiway analogue of [[adviseStrategy]]'s thesis-§6.4
-    * merge-feasibility check, which the star advisor previously
-    * ignored): each dim carries its fact-side join key, and one
+    * Plus a per-join-key SKEW probe (VERDICT r8 #4 — the multiway
+    * analogue of [[adviseStrategy]]'s thesis-§6.4 merge-feasibility
+    * check): each dim carries its fact-side join key, and one
     * map-side-combinable aggregate per key measures the hottest key's
     * repeat count. A cascade stage whose key fails the §6.4 test
     * (max_repeats · reducers · 10 > fact_rows · 9, cross-multiplied

@@ -1833,7 +1833,7 @@ object Similarity extends Serializable {
     // returned (LocalWalkSpec pins tier equality); only hot buckets
     // are rewritten either way. Past the budget the distributed form
     // is unchanged.
-    if (localWalkEligible(spark, path)) {
+    if (Tier.localStore(spark, "pruneKnnGraphIndex", Tier.AnnWalkBytes, path)) {
       import spark.implicits._
       val adjRows = spark.read.parquet(s"$path/adj")
         .select(col("src"), col("dst"), col("sb").cast("long"))
@@ -2249,41 +2249,6 @@ object Similarity extends Serializable {
       keep = None, widenCap = 1, seedOverride = Some(seeds))
   }
 
-  /** Recursive on-disk size of a stored relation — the eligibility
-    * input for the memory-resident walk tier (local java.io paths, the
-    * layout contract every store-verb here already assumes). */
-  private def dirBytes(f: java.io.File): Long =
-    if (!f.exists()) 0L
-    else if (f.isFile) f.length()
-    else {
-      val c = f.listFiles()
-      if (c == null) 0L else c.foldLeft(0L)((a, x) => a + dirBytes(x))
-    }
-
-  /** Budget for serving a stored graph MEMORY-RESIDENT (adj + vectors
-    * on-disk bytes): at or below it the beam walk runs task-locally
-    * over a broadcast of the index — the HNSW posture, and the same
-    * budget class as the entry tier's existing broadcast contract.
-    * `spark.graft.ann.localWalkIndexBytes` overrides (0 disables);
-    * default 64 MB — parquet double arrays are near-incompressible, so
-    * the broadcast is ~1-2× this, comfortably inside executor memory
-    * at any deployment size, while a 100 TB corpus index exceeds it by
-    * six orders of magnitude and keeps the distributed walk. */
-  private[graft] def localWalkEligible(
-      spark: org.apache.spark.sql.SparkSession, path: String): Boolean = {
-    val budget = spark.conf.getOption("spark.graft.ann.localWalkIndexBytes")
-      .map(_.toLong).getOrElse(64L << 20)
-    // fail CLOSED on anything that is not a readable local directory
-    // (hdfs://, s3://, missing stores): an unsizable index must take the
-    // distributed walk, never be collected to the driver on a 0-byte
-    // misread (VERDICT r12 #2)
-    val adj = new java.io.File(s"$path/adj")
-    val vecs = new java.io.File(s"$path/vectors")
-    budget > 0L &&
-      adj.isDirectory && adj.canRead && vecs.isDirectory && vecs.canRead &&
-      dirBytes(adj) + dirBytes(vecs) <= budget
-  }
-
   /** The plain/insertion beam walk executed TASK-LOCALLY over a
     * broadcast of the stored graph — value-identical to the
     * distributed rounds of [[beamWalkKnnStored]] by construction:
@@ -2473,7 +2438,7 @@ object Similarity extends Serializable {
     // The filtered/widened serving modes keep the distributed walk
     // (their `keep` predicate is an arbitrary Column).
     if (keep.isEmpty && widenCap == 1 && seedOverride.isEmpty &&
-        localWalkEligible(spark, path))
+        Tier.localStore(spark, "beamWalkKnnStored", Tier.AnnWalkBytes, path))
       return localBeamWalkKnnStored(path, queries, vec, id, k, nProbe,
         beamWidth, rounds, regionSeed)
     val m = spark.read.parquet(s"$path/meta").head()

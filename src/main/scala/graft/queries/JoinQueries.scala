@@ -236,7 +236,7 @@ object JoinQueries {
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |WHERE o_orderpriority = '1-URGENT' AND year(o_orderdate) = 1995
         |GROUP BY o_orderpriority""".stripMargin) { (s, d) =>
-      Joins.withSessionConfs(s, Joins.bloomFilterConfs: _*) {
+      graft.Graft.withConfs(s, Joins.bloomFilterConfs: _*) {
         val o = Tables.table(s, d, "orders")
           .filter(col("o_orderpriority") === "1-URGENT" && year(col("o_orderdate")) === 1995)
         val l = Tables.table(s, d, "lineitem")

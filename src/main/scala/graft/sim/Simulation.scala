@@ -1,5 +1,6 @@
 package graft.sim
 
+import graft.Graft
 import graft.datagen.DataGen
 import graft.operators.Joins
 import graft.sources.Tables
@@ -180,6 +181,13 @@ object Simulation {
     s"$rows,$unique,${a.reducers},${a.zipfSkew.getOrElse(0.0)},$fileSize,$j1,$j2,$j3"
   }
 
+  private val bcastKey = "spark.sql.autoBroadcastJoinThreshold"
+
+  /** A forced-shuffle arm: auto-broadcast and AQE off for `body` only,
+    * so the measured plan is the hand-built cascade, not Catalyst's. */
+  private def noBroadcast[A](spark: SparkSession)(body: => A): A =
+    Graft.withConfs(spark, bcastKey -> "-1", "spark.sql.adaptive.enabled" -> "false")(body)
+
   /** Multi-way star sweep (--multiway N, VERDICT r7 #4 / thesis
     * §5.4+§7 future work): one fact of `rows` rows carrying N foreign
     * keys against N dims of sizes unique, unique/10, unique/100, … —
@@ -252,17 +260,6 @@ object Simulation {
         acc.join(hint(dn)(d), col(s"k$i") === col(s"dk$i"))
       }.count()
     }
-    val bcastKey = "spark.sql.autoBroadcastJoinThreshold"
-    val prevB = spark.conf.get(bcastKey)
-    def noBroadcast(body: () => Long): Long = {
-      spark.conf.set(bcastKey, "-1")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      try body()
-      finally {
-        spark.conf.set(bcastKey, prevB)
-        spark.conf.set("spark.sql.adaptive.enabled", a.aqe.toString)
-      }
-    }
     // the ADVISED arm (--execute-advice, VERDICT r9 #4): build exactly
     // the cascade the skew-aware advisor prescribes — explicit
     // broadcast hints in admission order, autoSaltedJoin on flagged
@@ -292,12 +289,12 @@ object Simulation {
       // arm would measure Catalyst's call, not the advisor's);
       // broadcast-advised dims are pinned by explicit hints either way
       val anyShuffle = advMap.values.exists(_._3 != "broadcast")
-      if (anyShuffle) spark.conf.set(bcastKey, "-1")
-      try Joins.executeMultiwayAdvice(fact,
-        dims.zipWithIndex.map { case ((dn, d), i) =>
-          (dn, d, col(s"k$i"), col(s"dk$i")) },
-        advMap, reducers = a.reducers).count()
-      finally spark.conf.set(bcastKey, prevB)
+      Graft.withConfs(spark, (if (anyShuffle) Seq(bcastKey -> "-1") else Nil): _*) {
+        Joins.executeMultiwayAdvice(fact,
+          dims.zipWithIndex.map { case ((dn, d), i) =>
+            (dn, d, col(s"k$i"), col(s"dk$i")) },
+          advMap, reducers = a.reducers).count()
+      }
     }
     // force the lazy advice pass HERE, before any Measure.measured body
     // runs (ADVICE r10: lazy-val forcing inside the first advised() call
@@ -307,7 +304,7 @@ object Simulation {
     if (a.executeAdvice) { advMap: Unit }
     val strategies = Seq[(String, () => Long)](
       "broadcast-cascade" -> (() => cascade(_ => d => broadcast(d))),
-      "shuffle-cascade" -> (() => noBroadcast(() => cascade(_ => identity))),
+      "shuffle-cascade" -> (() => noBroadcast(spark)(cascade(_ => identity))),
       "aqe-auto" -> (() => cascade(_ => identity))) ++
       (if (a.executeAdvice) Seq("advised" -> (() => advised())) else Seq.empty)
     // best-of-2 per arm (the Bench methodology): single-shot arms were
@@ -380,17 +377,6 @@ object Simulation {
             .join(h(dimB), col("ak") === col("dk1"))
       joined.count()
     }
-    val bcastKey = "spark.sql.autoBroadcastJoinThreshold"
-    val prevB = spark.conf.get(bcastKey)
-    def noBroadcast(body: () => Long): Long = {
-      spark.conf.set(bcastKey, "-1")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      try body()
-      finally {
-        spark.conf.set(bcastKey, prevB)
-        spark.conf.set("spark.sql.adaptive.enabled", a.aqe.toString)
-      }
-    }
     // the ADVISED arm (--execute-advice): the chain order/broadcast
     // shape adviseChain prescribes, auto-broadcast off so the measured
     // plan is the advisor's own; advice priced separately (see
@@ -403,19 +389,17 @@ object Simulation {
       println(f"[advise-cost] rows=$rows topology=chain band=$band advice_ms=${(System.nanoTime() - t0) / 1e6}%.0f")
       band
     }
-    def advised(): Long = {
-      spark.conf.set(bcastKey, "-1")
-      try Joins.executeChainAdvice(fact, dimA, dimB,
+    def advised(): Long = Graft.withConfs(spark, bcastKey -> "-1") {
+      Joins.executeChainAdvice(fact, dimA, dimB,
         col("k0"), col("dk0"), col("ak"), col("dk1"), advBand).count()
-      finally spark.conf.set(bcastKey, prevB)
     }
     // force the advice pass before the measured arms — see multiwayStep
     if (a.executeAdvice) { advBand: Unit }
     val strategies = Seq[(String, () => Long)](
       "fact-first-bc" -> (() => chain(bcast = true, dimsFirst = false)),
       "dims-first-bc" -> (() => chain(bcast = true, dimsFirst = true)),
-      "fact-first-shuffle" -> (() => noBroadcast(() => chain(bcast = false, dimsFirst = false))),
-      "dims-first-shuffle" -> (() => noBroadcast(() => chain(bcast = false, dimsFirst = true))),
+      "fact-first-shuffle" -> (() => noBroadcast(spark)(chain(bcast = false, dimsFirst = false))),
+      "dims-first-shuffle" -> (() => noBroadcast(spark)(chain(bcast = false, dimsFirst = true))),
       "aqe-auto" -> (() => chain(bcast = false, dimsFirst = false))) ++
       (if (a.executeAdvice) Seq("advised" -> (() => advised())) else Seq.empty)
     // best-of-2 per arm — see multiwayStep
@@ -457,7 +441,7 @@ object Simulation {
 
   def main(argv: Array[String]): Unit = {
     val a = parse(argv)
-    val spark = graft.Graft.local(
+    val spark = Graft.local(
       conf = Map("spark.sql.shuffle.partitions" -> a.reducers.toString))
     run(spark, a)
     spark.stop()

@@ -280,28 +280,20 @@ object Streaming {
     // the query's whole runtime). Production guidance is the same:
     // stateful-stream partition count follows state volume, and it is
     // fixed at the first checkpoint anyway.
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val maintKey = "spark.sql.streaming.stateStore.maintenanceInterval"
-    val prevMaint = spark.conf.getOption(maintKey)
-    spark.conf.set("spark.sql.shuffle.partitions", partitions.toString)
-    // one-shot drains never live long enough to need background state
-    // snapshots; a long interval keeps the maintenance thread from
-    // stealing cycles mid-drain (it still runs at provider unload)
-    spark.conf.set(maintKey, "600s")
-    try {
+    //
+    // One-shot drains never live long enough to need background state
+    // snapshots; a long maintenance interval keeps the maintenance
+    // thread from stealing cycles mid-drain (it still runs at provider
+    // unload). Both settings are scoped to the drain.
+    graft.Graft.withConfs(spark,
+        "spark.sql.shuffle.partitions" -> partitions.toString,
+        "spark.sql.streaming.stateStore.maintenanceInterval" -> "600s") {
       val q = df.writeStream.outputMode(mode).format("memory").queryName(name).start()
       // called twice: the final watermark flush is a NO-DATA micro-batch,
       // and processAllAvailable's contract only covers data batches — the
       // second call is a cheap barrier that closes that race class
       try { q.processAllAvailable(); q.processAllAvailable() } finally q.stop()
       (spark.table(name), q.recentProgress.toSeq)
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      // restore, don't leak, the maintenance interval on the shared session
-      prevMaint match {
-        case Some(v) => spark.conf.set(maintKey, v)
-        case None => spark.conf.unset(maintKey)
-      }
     }
   }
 
@@ -872,11 +864,6 @@ object Streaming {
     val root = graft.sources.Tables.scratchDir("graft_incr_agg")
     val stateDir = s"$root/state"
     val dec = "decimal(18,2)"
-    // per-batch joins/aggs carry O(keys)=150 rows: size the shuffle to
-    // the state (same rationale as runToMemoryWithProgress), restore in
-    // the finally below
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     val changes = graft.operators.Changelog.fromEvents(
       eventsArrivalStream(spark, sfDir, nFiles))
     val payload = struct(col("seq"), col("op"), col("attr"), col("amount"))
@@ -885,7 +872,7 @@ object Streaming {
         .select(col("attr"),
           lit(sign.toLong).as("dn"),
           (col("amount").cast(dec) * sign).as("dv"))
-    val q = changes.writeStream
+    val query = changes.writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val s = batch.sparkSession
         val cur = new java.io.File(stateDir)
@@ -943,11 +930,12 @@ object Streaming {
         require(next.renameTo(cur), s"state swap failed at batch $batchId")
       }
       .option("checkpointLocation", s"$root/ckpt")
-      .start()
-    try { q.processAllAvailable(); q.processAllAvailable() }
-    finally {
-      q.stop()
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    // per-batch joins/aggs carry O(keys)=150 rows: size the shuffle to
+    // the state (same rationale as runToMemoryWithProgress); the stream
+    // takes the session's settings when it starts
+    graft.Graft.withConfs(spark, "spark.sql.shuffle.partitions" -> "8") {
+      val q = query.start()
+      try { q.processAllAvailable(); q.processAllAvailable() } finally q.stop()
     }
     spark.read.parquet(s"$stateDir/agg")
       .filter(col("n_keys") > 0)
@@ -1025,6 +1013,13 @@ object Streaming {
     runToMemory(spark, out.toDF(), s"sess_custom_${System.nanoTime()}", OutputMode.Append())
   }
 
+  /** Run `body` on the RocksDB state-store provider, which the
+    * transformWithState V2 API requires — scoped to `body` so the
+    * session default provider is back afterwards. */
+  private def withRocksDb[A](spark: SparkSession)(body: => A): A =
+    graft.Graft.withConfs(spark, "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
+
   /** [[sessionizeCustomState]] rebuilt on the transformWithState V2
     * API with EXPLICIT event-time timers ([[SessionTimerProcessor]]):
     * same gap, same emission contract, same oracle — RocksDB-backed
@@ -1032,11 +1027,7 @@ object Streaming {
     * [[transformWithStateStats]]). */
   def transformWithStateSessions(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb(spark) {
       // 2 slices — same slicing-invariant emission contract as
       // [[sessionizeCustomState]]
       val src = eventTime(eventsArrivalStream(spark, sfDir, nFiles = 2))
@@ -1049,9 +1040,6 @@ object Streaming {
           org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Append())
       runToMemory(spark, out.toDF(), s"sess_tws_${System.nanoTime()}",
         OutputMode.Append())
-    } finally prev match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
     }
   }
 
@@ -1064,11 +1052,7 @@ object Streaming {
   def streamKmvDistinct(spark: SparkSession, sfDir: String,
       arrivalSlices: Int = 0): DataFrame = {
     import spark.implicits._
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb(spark) {
       val src = if (arrivalSlices > 0)
         eventsArrivalStream(spark, sfDir, nFiles = arrivalSlices)
       else eventsStream(spark, sfDir)
@@ -1081,9 +1065,6 @@ object Streaming {
           org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
       runToMemory(spark, out.toDF(), s"kmvstream_${System.nanoTime()}",
         OutputMode.Update())
-    } finally prev match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
     }
   }
 
@@ -1109,11 +1090,7 @@ object Streaming {
       .select(col("key").cast("long").as("item"))
     val dir = graft.sources.Tables.scratchDir("graft_hh_stream")
     z.repartition(slices).write.mode("overwrite").parquet(dir)
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb(spark) {
       val src = spark.readStream
         .schema(org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("item",
@@ -1135,9 +1112,6 @@ object Streaming {
         .groupBy("item").agg(count(lit(1)).as("freq"))
         .filter(col("freq") * k > n)
         .select(col("item").as("key"), col("freq"))
-    } finally prev match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
     }
   }
 
@@ -1176,11 +1150,7 @@ object Streaming {
   def transformWithStateStats(spark: SparkSession, sfDir: String,
       arrivalSlices: Int = 0): DataFrame = {
     import spark.implicits._
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb(spark) {
       // arrivalSlices > 0: drive the same processor over the sliced
       // arrival fixture (one micro-batch per slice) — the multi-batch
       // state-accumulation path the spec exercises; Update mode then
@@ -1198,9 +1168,6 @@ object Streaming {
           org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
       runToMemory(spark, updates.toDF(), s"twstats_${System.nanoTime()}",
         OutputMode.Update())
-    } finally prev match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None => spark.conf.unset(providerKey)
     }
   }
 
@@ -1322,9 +1289,7 @@ object Streaming {
     val outDir = s"$root/out"
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val idxDir = annGraphIngestIndex(spark, sfDir)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
+    graft.Graft.withConfs(spark, "spark.sql.shuffle.partitions" -> "8") {
       val stream = spark.readStream.schema(emb.schema)
         .option("maxFilesPerTrigger", "1")
         .option("pathGlobFilter", "*.parquet")
@@ -1352,8 +1317,6 @@ object Streaming {
         .option("checkpointLocation", s"$root/ckpt")
         .start()
       try { q.processAllAvailable(); q.processAllAvailable() } finally q.stop()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
     }
     spark.read.parquet(outDir)
   }
@@ -1389,9 +1352,7 @@ object Streaming {
         idxDir)
       require(idxDone.createNewFile())
     }
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
+    graft.Graft.withConfs(spark, "spark.sql.shuffle.partitions" -> "8") {
       val stream = spark.readStream.schema(emb.schema)
         .option("maxFilesPerTrigger", "1")
         .option("pathGlobFilter", "*.parquet")
@@ -1407,8 +1368,6 @@ object Streaming {
         .option("checkpointLocation", s"$root/ckpt")
         .start()
       try { q.processAllAvailable(); q.processAllAvailable() } finally q.stop()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
     }
     spark.read.parquet(outDir)
   }
@@ -1470,9 +1429,7 @@ object Streaming {
     // to the delta like runToMemoryWithProgress sizes stateful drains
     // to their state (the corpus-sized index WRITE above already ran
     // wide under the session default)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
+    graft.Graft.withConfs(spark, "spark.sql.shuffle.partitions" -> "8") {
       // 2 files per trigger over the 4 arrival slices = 2 micro-batches:
       // the gate is STATELESS per batch (foreachBatch against the stored
       // index — no watermark/eviction contract to exercise), so two
@@ -1494,8 +1451,6 @@ object Streaming {
         .option("checkpointLocation", s"$root/ckpt")
         .start()
       try { q.processAllAvailable(); q.processAllAvailable() } finally q.stop()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
     }
     spark.read.parquet(outDir)
   }

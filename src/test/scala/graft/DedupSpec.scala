@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
+import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis, Tier}
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
 
@@ -179,6 +179,16 @@ class DedupSpec extends SparkSpec {
     assert(local.nonEmpty, "gate equivalence over an empty verdict set proves nothing")
     spark.catalog.clearCache()
     graft.sources.Tables.deleteRecursive(idx)
+  }
+
+  test("under a zero budget, connected components of an empty edge set run distributed") {
+    import spark.implicits._
+    val empty = Seq.empty[(Long, Long)].toDF("a", "b")
+    val (labels, choices) = Graft.withConfs(spark, Tier.CcEdges.key -> "0") {
+      tierChoices("connectedComponents")(Dedup.connectedComponents(empty).collect())
+    }
+    assert(choices == Seq("distributed"))
+    assert(labels.isEmpty)
   }
 
   test("local union-find tier ≡ distributed star rounds on randomized graphs") {

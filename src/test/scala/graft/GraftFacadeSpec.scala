@@ -2,6 +2,37 @@ package graft
 
 class GraftFacadeSpec extends SparkSpec {
 
+  test("withConfs restores a set key and unsets an unset one, also when the body throws") {
+    // the unset key has a built-in default, so "unset" is checked on
+    // the explicitly set map (`getOption` would report the default)
+    val setKey = "graft.spec.withConfs.set"
+    val unsetKey = "spark.sql.adaptive.coalescePartitions.enabled"
+    val prevUnset = spark.conf.getAll.get(unsetKey)
+    spark.conf.set(setKey, "before")
+    spark.conf.unset(unsetKey)
+    def restored(): Unit = {
+      assert(spark.conf.getOption(setKey).contains("before"))
+      assert(!spark.conf.getAll.contains(unsetKey))
+    }
+    try {
+      val inside = Graft.withConfs(spark, setKey -> "in", unsetKey -> "false") {
+        (spark.conf.get(setKey), spark.conf.get(unsetKey))
+      }
+      assert(inside == (("in", "false")))
+      restored()
+      val err = intercept[IllegalStateException] {
+        Graft.withConfs(spark, setKey -> "in", unsetKey -> "false") {
+          throw new IllegalStateException("body failed")
+        }
+      }
+      assert(err.getMessage == "body failed")
+      restored()
+    } finally {
+      spark.conf.unset(setKey)
+      prevUnset.foreach(spark.conf.set(unsetKey, _))
+    }
+  }
+
   test("registerViews exposes the SQL surface with oracle-compatible names") {
     Graft.configure(spark)
     Graft.registerViews(spark, sf)

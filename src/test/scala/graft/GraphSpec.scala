@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Graph
+import graft.operators.{Graph, Tier}
 import org.apache.spark.sql.functions._
 
 class GraphSpec extends SparkSpec {
@@ -276,6 +276,34 @@ class GraphSpec extends SparkSpec {
     // radius-1 truncation: only direct neighbors counted
     assert(run(1) == Map(
       1L -> (1000000L, 1L), 2L -> (2000000L, 2L), 8L -> (1000000L, 1L)))
+  }
+
+  test("a distributed-tier pageRank leaves the coalesce setting as it found it") {
+    import spark.implicits._
+    // the explicitly set value, None when unset (`getOption` would
+    // report the built-in default either way)
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    def explicit: Option[String] = spark.conf.getAll.get(key)
+    val prev = explicit
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 2L)).toDF("src", "dst")
+    try Graft.withConfs(spark, Tier.GraphEdges.key -> "0") {
+      for (before <- Seq(None, Some("true"))) {
+        before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+        val (n, choices) = tierChoices("pageRank")(Graph.pageRank(edges, 3).count())
+        assert(choices == Seq("distributed") && n == 3L)
+        assert(explicit == before, s"was $before")
+      }
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("under a zero budget, an empty edge set takes the distributed tier") {
+    import spark.implicits._
+    val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
+    val (ranks, choices) = Graft.withConfs(spark, Tier.GraphEdges.key -> "0") {
+      tierChoices("pageRank")(Graph.pageRank(empty, 3).collect())
+    }
+    assert(choices == Seq("distributed"))
+    assert(ranks.isEmpty)
   }
 
   test("local iteration tier ≡ distributed rounds for every fixed-point operator") {

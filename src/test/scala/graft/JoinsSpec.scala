@@ -187,18 +187,19 @@ class JoinsSpec extends SparkSpec {
       s"hot key ${ref.getLong(3)} must stay under 1% of ${ref.getLong(2)}")
   }
 
-  test("adviseMultiway admits dims greedily against the cumulative budget") {
+  test("adviseMultiwaySkew admits dims greedily against the cumulative budget") {
     import spark.implicits._
     val fact = (1L to 100L).toDF("f")
     val d1 = (1L to 2L).toDF("k")  // 200 B at 100 B/row
     val d2 = (1L to 5L).toDF("k")  // 500 B
     val d3 = (1L to 30L).toDF("k") // 3000 B
     def advise(budget: Long): Map[String, (Int, String)] =
-      Joins.adviseMultiway("t", fact,
-          Seq("d1" -> d1, "d2" -> d2, "d3" -> d3),
-          rowBytes = 100L, broadcastBudgetBytes = budget)
+      Joins.adviseMultiwaySkew("t", fact,
+          Seq(("d1", d1, col("f")), ("d2", d2, col("f")), ("d3", d3, col("f"))),
+          rowBytes = 100L, broadcastBudgetBytes = budget, reducers = 4)
         .collect()
-        .map(r => r.getString(1) -> ((r.getInt(5), r.getString(6)))).toMap
+        .map(r => r.getAs[String]("dim_name") ->
+          ((r.getAs[Int]("dim_broadcast"), r.getAs[String]("advice")))).toMap
     // all three fit the running total (200+500+3000 ≤ 3700)
     val all = advise(3700L)
     assert(all.values.forall(_._2 == "broadcast-cascade"))
@@ -242,7 +243,7 @@ class JoinsSpec extends SparkSpec {
     assert(aqe("dhot") == ((0, 1, "plain-shuffle (AQE handles skew)")),
       s"got ${aqe("dhot")}")
     assert(aqe("duni") == ((0, 0, "shuffle")), s"got ${aqe("duni")}")
-    Joins.withSessionConfs(spark,
+    Graft.withConfs(spark,
       "spark.sql.adaptive.skewJoin.enabled" -> "false") {
       // AQE off, hot share 50% — §6.4-skewed but BELOW the measured
       // salting break-even (~3/4 of the fact: the runtime probe +
@@ -320,7 +321,7 @@ class JoinsSpec extends SparkSpec {
       case a: AdaptiveSparkPlanExec => a.executedPlan
       case x => x
     }
-    Joins.withSessionConfs(spark,
+    Graft.withConfs(spark,
       "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       // band 1: both dims inside the cumulative budget → two pinned
       // BHJs (ours — auto-broadcast is off), no salting machinery
@@ -335,7 +336,7 @@ class JoinsSpec extends SparkSpec {
       // band 2a: budget 0 with AQE skew splitting OFF → both dims
       // shuffle; the skew-flagged k0 dim goes through autoSaltedJoin
       // (salt columns in the plan), the uniform one joins plain
-      Joins.withSessionConfs(spark,
+      Graft.withConfs(spark,
         "spark.sql.adaptive.skewJoin.enabled" -> "false") {
         val sh = Joins.executeAdvisedMultiway(fact, dims, rowBytes = 100L,
           broadcastBudgetBytes = 0L, reducers = 8)
@@ -384,7 +385,7 @@ class JoinsSpec extends SparkSpec {
       (out, unwrap(df.queryExecution.executedPlan)
         .collect { case x: BroadcastHashJoinExec => x }.size)
     }
-    Joins.withSessionConfs(spark,
+    Graft.withConfs(spark,
       "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val (r1, b1) = run(4000L) // pipelined-bhj: both broadcast
       assert(r1.sameElements(plain) && b1 == 2, s"pipelined-bhj: got $b1 BHJs")

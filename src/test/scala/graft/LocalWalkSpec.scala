@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Similarity
+import graft.operators.{Similarity, Tier}
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
 
@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * the append verb, and the over-budget fallback. */
 class LocalWalkSpec extends SparkSpec {
 
-  private val budgetKey = "spark.graft.ann.localWalkIndexBytes"
+  private val budgetKey = Tier.AnnWalkBytes.key
 
   private def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Int, Long)] =
     df.collect().map(r =>
@@ -38,27 +38,36 @@ class LocalWalkSpec extends SparkSpec {
     // a store the sizer cannot see (remote URI, missing directory) must
     // take the DISTRIBUTED path — never the collect-to-driver tier on a
     // 0-byte misread (VERDICT r12 #2)
-    assert(!Similarity.localWalkEligible(spark, "hdfs://nn:8020/idx"))
-    assert(!Similarity.localWalkEligible(spark, "s3://bucket/idx"))
-    assert(!Similarity.localWalkEligible(spark,
-      Tables.scratchDir("spec_localwalk_nonexistent") + "/never_written"))
-    assert(!graft.operators.Dedup.localGateEligible(spark, "hdfs://nn:8020/dd"))
-    assert(!graft.operators.Dedup.localGateEligible(spark,
-      Tables.scratchDir("spec_localgate_nonexistent") + "/never_written"))
+    val walk = Tier.AnnWalkBytes.stores
+    val gate = Tier.DedupGateBytes.stores
+    assert(Tier.storeBytes("hdfs://nn:8020/idx", walk).isEmpty)
+    assert(Tier.storeBytes("s3://bucket/idx", walk).isEmpty)
+    assert(Tier.storeBytes(
+      Tables.scratchDir("spec_localwalk_nonexistent") + "/never_written", walk).isEmpty)
+    assert(Tier.storeBytes("hdfs://nn:8020/dd", gate).isEmpty)
+    assert(Tier.storeBytes(
+      Tables.scratchDir("spec_localgate_nonexistent") + "/never_written", gate).isEmpty)
+    // and an unsizable store is a distributed decision under any budget
+    val (local, choices) = tierChoices("spec") {
+      Graft.withConfs(spark, budgetKey -> Long.MaxValue.toString) {
+        Tier.localStore(spark, "spec", Tier.AnnWalkBytes, "s3://bucket/idx")
+      }
+    }
+    assert(!local && choices == Seq("distributed"))
   }
 
   test("serve walk: local tier ≡ distributed rounds, all four columns") {
     val emb = Tables.table(spark, sf, "embeddings")
     val q = emb.filter(col("vec_id") % 50 === 0)
     val idx = buildIdx("spec_localwalk_serve")
-    assert(Similarity.localWalkEligible(spark, idx),
+    assert(Tier.localStore(spark, "spec", Tier.AnnWalkBytes, idx),
       "spec index must sit under the default local-walk budget")
     val local = rows(Similarity.beamSearchKnnStored(idx, q,
       col("embedding"), col("vec_id"), k = 5, nProbe = 4, beamWidth = 16,
       rounds = 4))
     spark.conf.set(budgetKey, "0") // force the distributed walk
     try {
-      assert(!Similarity.localWalkEligible(spark, idx))
+      assert(!Tier.localStore(spark, "spec", Tier.AnnWalkBytes, idx))
       val dist = rows(Similarity.beamSearchKnnStored(idx, q,
         col("embedding"), col("vec_id"), k = 5, nProbe = 4, beamWidth = 16,
         rounds = 4))

@@ -89,10 +89,10 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("runtime bloom-filter pruning injects on selective fact-dim joins") {
-    // conf-scoped via withSessionConfs — the earlier form of this test
+    // conf-scoped via Graft.withConfs — the earlier form of this test
     // restored only creationSideThreshold and leaked the 0-byte
     // application-side threshold into every later suite in the JVM
-    Joins.withSessionConfs(spark,
+    Graft.withConfs(spark,
       Joins.bloomFilterConfs :+
         ("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "10GB"): _*) {
       val li = Tables.table(spark, sf, "lineitem")
@@ -225,7 +225,7 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("runtime bloom filter prunes the fact scan of a selective dim join") {
-    Joins.withSessionConfs(spark, Joins.bloomFilterConfs: _*) {
+    Graft.withConfs(spark, Joins.bloomFilterConfs: _*) {
       val o = Tables.table(spark, sf, "orders")
         .filter(col("o_orderpriority") === "1-URGENT" && year(col("o_orderdate")) === 1995)
       val l = Tables.table(spark, sf, "lineitem")

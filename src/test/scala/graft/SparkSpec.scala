@@ -14,4 +14,16 @@ object SparkSpec {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
   val sf: String = SparkSpec.sf
+
+  /** Run `body`; return its value and the `"choice"` of every
+    * `[graft-tier]` stderr line it printed for operator `op`. */
+  protected def tierChoices[A](op: String)(body: => A): (A, Seq[String]) = {
+    val buf = new java.io.ByteArrayOutputStream()
+    val err = System.err
+    System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
+    val out = try body finally System.setErr(err)
+    val line = ("""\[graft-tier\] \{"op":"""" + op + """",.*"choice":"(\w+)"\}""").r
+    (out, buf.toString("UTF-8").linesIterator
+      .flatMap(l => line.findFirstMatchIn(l).map(_.group(1))).toSeq)
+  }
 }
