@@ -19,6 +19,7 @@ import org.apache.spark.sql.functions._
   * {{{
   * runMain graft.Scale graph <nEdges=1000000> [nNodesDivisor=10] [zipfSkew=0] [ops=all|pagerank,bfs,cc,inccc,lpa,kcore,sssp]
   * runMain graft.Scale dedup <nDocs=1000000> [tokensPerDoc=60] [plantEvery=20] [mode=spans|lsh|ingest|stored|segments|winnow|winnowhot]
+  *   (`ingest` leaves its stored index in java.io.tmpdir for ONE later `stored` run at the same sizes, which deletes it)
   * runMain graft.Scale tfidf <nDocs=200000> [tokensPerDoc=60]
   * runMain graft.Scale ann <nVecs=200000> [dims=64] [nQueries=100] [nClusters=256] [ops=all|brute,hamming,ivf,graph,filtered,mmr] [refineRounds=1] [bridge=6] [refineMode=rng|rng:<alpha>|topk] [entriesPerRegion=1] [appendShift=0]
   * }}}
@@ -194,9 +195,10 @@ object Scale {
     * prefixes EVERY doc with one shared boilerplate, the df² hot key the
     * maxFpDf cut must neutralize. `ingest` builds the MinHash band index
     * once, then pushes a FIXED 2 000-doc delta (every 10th a near-copy)
-    * through the cached and the stored gate; `stored` re-probes a prior
-    * `ingest` run's stored index in a fresh JVM. `segments` runs C4
-    * segment dedup over the `spans` corpus. */
+    * through the cached and the stored gate, and leaves its stored index
+    * in java.io.tmpdir for one `stored` run, which re-probes it in a
+    * fresh JVM and then deletes it. `segments` runs C4 segment dedup
+    * over the `spans` corpus. */
   def dedup(spark: SparkSession, a: Args): Unit = {
     val nDocs = a.long(0, 1000000L)
     val tpd = a.int(1, 60)
@@ -231,15 +233,21 @@ object Scale {
     // per-ingest number, uncontaminated by the build's GC/page-cache
     // residue (the build JVM's own post-write pass read 86.6 s where a
     // fresh JVM settles at ~14 s on the same 1 M-doc index). The corpus
-    // is never generated here; only the fixed delta is.
+    // is never generated here; only the fixed delta is. The index is
+    // deleted after the last pass: a corpus-sized index must not outlive
+    // the probe it was kept for.
     if (mode == "stored") {
-      val (delta, _, _) = Iterate.ckpt(deltaPlan)
-      for (pass <- 1 to 3) {
-        val dups = timed(s"ingest_stored_fresh$pass") {
-          Dedup.incrementalDedupStored(idxDir, delta, col("text"), col("doc_id")).count()
+      require(new java.io.File(idxDir).isDirectory,
+        s"no stored index at $idxDir: run `graft.Scale dedup $nDocs $tpd $plantEvery ingest` first")
+      try {
+        val (delta, _, _) = Iterate.ckpt(deltaPlan)
+        for (pass <- 1 to 3) {
+          val dups = timed(s"ingest_stored_fresh$pass") {
+            Dedup.incrementalDedupStored(idxDir, delta, col("text"), col("doc_id")).count()
+          }
+          check(s"ingest_stored_fresh${pass}_check", nDelta / plantD, dups)
         }
-        check(s"ingest_stored_fresh${pass}_check", nDelta / plantD, dups)
-      }
+      } finally Tables.deleteRecursive(idxDir)
       return
     }
 

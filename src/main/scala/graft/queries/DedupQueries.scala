@@ -381,20 +381,11 @@ object DedupQueries {
       // index is a maintained artifact, its build is priced by
       // dedup_incremental); each run works on a FILE COPY because the
       // append below mutates the layout
-      val src = new java.io.File(s"$d/documents.parquet")
-      require(src.exists(), s"index source does not exist: $src")
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$d|${src.length()}_${src.lastModified()}".getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.take(12)
-      val pristine = new java.io.File(
-        sys.props("java.io.tmpdir"), s"graft_idxapp_$key")
-      val ready = new java.io.File(pristine, "_GRAFT_READY")
-      if (!ready.exists()) {
-        org.apache.commons.io.FileUtils.deleteQuietly(pristine)
+      val pristine = Tables.stampedFixture(d, "documents",
+          key => s"graft_idxapp_$key") { dir =>
         Dedup.writeIncrementalIndex(
           docs.filter(col("doc_id") % 5 =!= 0 && col("doc_id") % 5 =!= 1),
-          col("text"), col("doc_id"), pristine.getPath)
-        ready.createNewFile(): Unit
+          col("text"), col("doc_id"), dir.getPath)
       }
       // per-phase wall attribution (VERDICT r6: the bundled lifecycle
       // was the slowest bench query with no phase split) — each phase
@@ -402,10 +393,7 @@ object DedupQueries {
       // writers materialize), so nanoTime spans are honest; one JSON
       // line lands in the Verify/Bench log per run
       val phase = new Phases("dedup_index_append")
-      val idx = graft.sources.Tables.scratchDir("graft_idx_append")
-      phase("copy") {
-        graft.sources.Tables.linkCopyDirectory(pristine, new java.io.File(idx))
-      }
+      val idx = phase("copy") { Tables.scratchCopy("graft_idx_append", pristine) }
       val delta1 = docs.filter(col("doc_id") % 5 === 1)
       val g1 = phase("gate1") {
         Dedup.incrementalDedupStored(idx, delta1, col("text"), col("doc_id"))

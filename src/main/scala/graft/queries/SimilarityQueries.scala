@@ -711,42 +711,30 @@ object SimilarityQueries {
       |HAVING round(CAST(sum(p) AS DOUBLE), 6) >= 0.3""".stripMargin
 
   /** Idempotent stamp-keyed stored tf-idf index under java.io.tmpdir —
-    * built once per (sfDir, documents.parquet bytes); the srcStamp key
-    * (the Streaming arrival-fixture scheme) means driver testdata
-    * regeneration auto-invalidates a stale index instead of silently
-    * serving old postings. `filter` restricts the indexed corpus (the
+    * built once per (sfDir, documents.parquet bytes) through
+    * [[Tables.stampedFixture]], so driver testdata regeneration
+    * auto-invalidates a stale index instead of silently serving old
+    * postings. `filter` restricts the indexed corpus (the
     * append-lifecycle queries build on the base four-fifths); the v2
     * dir prefix invalidates r7 layouts that predate the raw-tf/idf
     * stores. */
   private def stampedTfidfIndex(s: org.apache.spark.sql.SparkSession,
       d: String, tag: String,
-      filter: org.apache.spark.sql.Column => org.apache.spark.sql.Column)
-      : java.io.File = {
-    val src = new java.io.File(s"$d/documents.parquet")
-    require(src.exists(), s"stored-tfidf source does not exist: $src")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$d|${src.length()}_${src.lastModified()}".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    val root = new java.io.File(sys.props("java.io.tmpdir"), s"graft_$tag$key")
-    val ready = new java.io.File(root, "_GRAFT_READY")
-    if (!ready.exists()) {
-      org.apache.commons.io.FileUtils.deleteQuietly(root)
+      filter: org.apache.spark.sql.Column => org.apache.spark.sql.Column): String =
+    Tables.stampedFixture(d, "documents", key => s"graft_$tag$key") { root =>
       Similarity.writeTfidfIndex(
         tfidfTerms(s, d).filter(filter(col("doc_id"))), root.getPath)
-      ready.createNewFile(): Unit
     }
-    root
-  }
 
   private def storedTfidfIndex(s: org.apache.spark.sql.SparkSession,
       d: String): String =
-    stampedTfidfIndex(s, d, "tfidf_idx3_", _ => lit(true)).getPath
+    stampedTfidfIndex(s, d, "tfidf_idx3_", _ => lit(true))
 
   /** The pristine base-corpus (doc_id % 5 <> 4) index the append
     * lifecycle queries copy-then-mutate — built once per testdata
     * stamp, never touched in place. */
   private def pristineTfidfBase(s: org.apache.spark.sql.SparkSession,
-      d: String): java.io.File =
+      d: String): String =
     stampedTfidfIndex(s, d, "tfidf_base3_", _ % 5 =!= 4)
 
   /** Stamp-cached MAINTAINED tf-idf index (VERDICT r10 #3): the full
@@ -758,32 +746,16 @@ object SimilarityQueries {
     * fresh full-corpus build (the join_tfidf_append contract), but
     * physically it is the appended+refreshed+compacted store. */
   private def maintainedTfidfIndex(s: org.apache.spark.sql.SparkSession,
-      d: String): String = {
-    val src = new java.io.File(s"$d/documents.parquet")
-    require(src.exists(), s"maintained-tfidf source does not exist: $src")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$d|${src.length()}_${src.lastModified()}".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    val root = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_tfidf_maint1_$key")
-    val ready = new java.io.File(root, "_GRAFT_READY")
-    if (!ready.exists()) {
-      org.apache.commons.io.FileUtils.deleteQuietly(root)
-      graft.sources.Tables.linkCopyDirectory(pristineTfidfBase(s, d), root)
-      // the copy brings the PRISTINE dir's ready marker along — drop it
-      // until this dir's own lifecycle completes, or a crashed
-      // maintenance run would serve a half-maintained index forever
-      new java.io.File(root, "_GRAFT_READY").delete(): Unit
+      d: String): String =
+    Tables.stampedFixture(d, "documents", key => s"graft_tfidf_maint1_$key") { root =>
+      Tables.linkCopyDirectory(new java.io.File(pristineTfidfBase(s, d)), root)
       Similarity.appendToTfidfIndex(root.getPath,
         tfidfTerms(s, d).filter(col("doc_id") % 5 === 4))
       require(Similarity.refreshTfidfIndexIfStale(s, root.getPath,
           maxGrowthPpm = 100000L),
         "25% corpus growth must trip the 10% drift budget")
       Similarity.compactTfidfIndex(s, root.getPath)
-      ready.createNewFile(): Unit
     }
-    root.getPath
-  }
 
   /** Full-corpus serve-only graph index shared by ann_graph_beam and
     * ann_graph_filtered — immutable, stamp-cached per testdata.
@@ -793,17 +765,9 @@ object SimilarityQueries {
     * layout (identical bytes, so its cache key is unchanged). */
   private def servedGraphIndex(s: org.apache.spark.sql.SparkSession,
       d: String, perRegion: Int = 1): String = {
-    val emb = Tables.table(s, d, "embeddings")
-    val src = new java.io.File(s"$d/embeddings.parquet")
-    require(src.exists(), s"beam-index source does not exist: $src")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$d|${src.length()}_${src.lastModified()}".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
     val tag = if (perRegion == 1) "graft_knng2_" else s"graft_knng2e${perRegion}_"
-    val idx = new java.io.File(sys.props("java.io.tmpdir"), s"$tag$key")
-    val ready = new java.io.File(idx, "_GRAFT_READY")
-    if (!ready.exists()) {
-      org.apache.commons.io.FileUtils.deleteQuietly(idx)
+    Tables.stampedFixture(d, "embeddings", key => s"$tag$key") { idx =>
+      val emb = Tables.table(s, d, "embeddings")
       Similarity.writeKnnGraphIndex(
         Similarity.knnGraphExact(emb, col("embedding"), col("vec_id"), 8),
         emb, col("embedding"), col("vec_id"),
@@ -811,31 +775,19 @@ object SimilarityQueries {
           Similarity.ivfAssignments(emb, col("embedding"), col("vec_id"), 8),
           perRegion),
         idx.getPath)
-      ready.createNewFile(): Unit
     }
-    idx.getPath
   }
 
   /** The pristine two-thirds (vec_id % 3 <> 1) graph-ANN index the
     * insert/prune lifecycle queries copy-then-mutate — stamp-cached
     * per testdata like [[pristineTfidfBase]]. */
   private def pristineGraphBase(s: org.apache.spark.sql.SparkSession,
-      d: String): java.io.File = {
-    val emb = Tables.table(s, d, "embeddings")
-    val base = emb.filter(col("vec_id") % 3 =!= 1)
-    val src = new java.io.File(s"$d/embeddings.parquet")
-    require(src.exists(), s"graph-base source does not exist: $src")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$d|${src.length()}_${src.lastModified()}".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
+      d: String): String =
     // _v3 layout: the build quantizer is persisted (centroids/), so the
     // append lifecycle's insertion walks REGION-seed (VERDICT r11 #1) —
     // prefix bumped per the stored-layout cache rule
-    val pristine = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_knngb3_$key")
-    val ready = new java.io.File(pristine, "_GRAFT_READY")
-    if (!ready.exists()) {
-      org.apache.commons.io.FileUtils.deleteQuietly(pristine)
+    Tables.stampedFixture(d, "embeddings", key => s"graft_knngb3_$key") { pristine =>
+      val base = Tables.table(s, d, "embeddings").filter(col("vec_id") % 3 =!= 1)
       Similarity.writeKnnGraphIndex(
         Similarity.knnGraphExact(base, col("embedding"), col("vec_id"), 8),
         base, col("embedding"), col("vec_id"),
@@ -844,10 +796,7 @@ object SimilarityQueries {
         pristine.getPath,
         centroids = Similarity.firstNCentroids(base, col("embedding"),
           col("vec_id"), 8))
-      ready.createNewFile(): Unit
     }
-    pristine
-  }
 
   /** Pristine BLOCKED-BUILT graph index (full corpus, first-8
     * IVF-quantizer cells at MULTI-probe 2, kGraph 8) — the
@@ -858,18 +807,9 @@ object SimilarityQueries {
     * partitioned graph — the refine verb's documented precondition).
     * Stamp-cached per testdata like [[pristineGraphBase]]. */
   private def pristineBlockedGraph(s: org.apache.spark.sql.SparkSession,
-      d: String): java.io.File = {
-    val emb = Tables.table(s, d, "embeddings")
-    val src = new java.io.File(s"$d/embeddings.parquet")
-    require(src.exists(), s"blocked-graph source does not exist: $src")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$d|${src.length()}_${src.lastModified()}".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    val pristine = new java.io.File(
-      sys.props("java.io.tmpdir"), s"graft_knngblk2_$key")
-    val ready = new java.io.File(pristine, "_GRAFT_READY")
-    if (!ready.exists()) {
-      org.apache.commons.io.FileUtils.deleteQuietly(pristine)
+      d: String): String =
+    Tables.stampedFixture(d, "embeddings", key => s"graft_knngblk2_$key") { pristine =>
+      val emb = Tables.table(s, d, "embeddings")
       Similarity.writeKnnGraphIndex(
         Similarity.knnGraphBlockedMulti(emb, col("embedding"), col("vec_id"),
           Similarity.ivfAssignmentsMulti(emb, col("embedding"), col("vec_id"),
@@ -878,10 +818,7 @@ object SimilarityQueries {
         Similarity.ivfAssignments(emb, col("embedding"), col("vec_id"), 8)
           .groupBy("cid").agg(min(col("vid")).as("vid")),
         pristine.getPath)
-      ready.createNewFile(): Unit
     }
-    pristine
-  }
 
   val all: Seq[QueryDef] = Seq(
     QueryDef(
@@ -1009,30 +946,18 @@ object SimilarityQueries {
     // so the oracle is shared with ann_ivf / ann_ivf_stored.
     QueryDef("ann_ivf_append", ivfOracle) { (s, d) =>
       val emb = Tables.table(s, d, "embeddings")
-      val src = new java.io.File(s"$d/embeddings.parquet")
-      require(src.exists(), s"ivf-append source does not exist: $src")
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$d|${src.length()}_${src.lastModified()}".getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.take(12)
-      val pristine = new java.io.File(
-        sys.props("java.io.tmpdir"), s"graft_ivfapp_$key")
-      val ready = new java.io.File(pristine, "_GRAFT_READY")
-      if (!ready.exists()) {
-        org.apache.commons.io.FileUtils.deleteQuietly(pristine)
+      val pristine = Tables.stampedFixture(d, "embeddings",
+          key => s"graft_ivfapp_$key") { dir =>
         Similarity.writeIvfIndex(emb.filter(col("vec_id") % 3 =!= 1),
           col("embedding"), col("vec_id"),
           Similarity.firstNCentroids(emb, col("embedding"), col("vec_id"), 8),
-          pristine.getPath)
-        ready.createNewFile(): Unit
+          dir.getPath)
       }
       // per-phase wall attribution (VERDICT r7 #5: the compact+gate
       // phases added in r7 made this the one >30% bench mover with no
       // phase split — the dedup_index_append treatment)
       val phase = new Phases("ann_ivf_append")
-      val idx = Tables.scratchDir("graft_ivf_append")
-      phase("copy") {
-        graft.sources.Tables.linkCopyDirectory(pristine, new java.io.File(idx))
-      }
+      val idx = phase("copy") { Tables.scratchCopy("graft_ivf_append", pristine) }
       phase("append") {
         Similarity.appendToIvfIndex(idx, emb.filter(col("vec_id") % 3 === 1),
           col("embedding"), col("vec_id"))
@@ -1291,10 +1216,7 @@ object SimilarityQueries {
       val emb = Tables.table(s, d, "embeddings")
       val pristine = pristineBlockedGraph(s, d)
       val phase = new Phases("ann_graph_refine")
-      val idx = Tables.scratchDir("graft_knng_refine")
-      phase("copy") {
-        graft.sources.Tables.linkCopyDirectory(pristine, new java.io.File(idx))
-      }
+      val idx = phase("copy") { Tables.scratchCopy("graft_knng_refine", pristine) }
       phase("refine") {
         Similarity.refineKnnGraphIndex(s, idx, kGraph = 8, rounds = 1)
       }
@@ -1314,10 +1236,7 @@ object SimilarityQueries {
       val emb = Tables.table(s, d, "embeddings")
       val pristine = pristineGraphBase(s, d)
       val phase = new Phases("ann_graph_append")
-      val idx = Tables.scratchDir("graft_knng_append")
-      phase("copy") {
-        graft.sources.Tables.linkCopyDirectory(pristine, new java.io.File(idx))
-      }
+      val idx = phase("copy") { Tables.scratchCopy("graft_knng_append", pristine) }
       val inserted = phase("insert") {
         Similarity.appendToKnnGraphIndex(idx, emb.filter(col("vec_id") % 3 === 1),
           col("embedding"), col("vec_id"), kGraph = 8, nProbe = 4,
@@ -1342,10 +1261,7 @@ object SimilarityQueries {
       val emb = Tables.table(s, d, "embeddings")
       val pristine = pristineGraphBase(s, d)
       val phase = new Phases("ann_graph_prune")
-      val idx = Tables.scratchDir("graft_knng_prune")
-      phase("copy") {
-        graft.sources.Tables.linkCopyDirectory(pristine, new java.io.File(idx))
-      }
+      val idx = phase("copy") { Tables.scratchCopy("graft_knng_prune", pristine) }
       phase("insert") {
         Similarity.appendToKnnGraphIndex(idx, emb.filter(col("vec_id") % 3 === 1),
           col("embedding"), col("vec_id"), kGraph = 8, nProbe = 4,
@@ -1381,10 +1297,7 @@ object SimilarityQueries {
       val emb = Tables.table(s, d, "embeddings")
       val pristine = pristineGraphBase(s, d)
       val phase = new Phases("ann_graph_entry_refresh")
-      val idx = Tables.scratchDir("graft_knng_entref")
-      phase("copy") {
-        graft.sources.Tables.linkCopyDirectory(pristine, new java.io.File(idx))
-      }
+      val idx = phase("copy") { Tables.scratchCopy("graft_knng_entref", pristine) }
       phase("insert") {
         Similarity.appendToKnnGraphIndex(idx, emb.filter(col("vec_id") % 3 === 1),
           col("embedding"), col("vec_id"), kGraph = 8, nProbe = 4,
@@ -1430,9 +1343,7 @@ object SimilarityQueries {
       // copy the stamp-cached pristine base (shared with
       // join_tfidf_append) instead of rebuilding it per run — the run
       // MUTATES its copy, so the copy itself cannot be cached
-      val idx = Tables.scratchDir("graft_tfidf_appf")
-      graft.sources.Tables.linkCopyDirectory(
-        pristineTfidfBase(s, d), new java.io.File(idx))
+      val idx = Tables.scratchCopy("graft_tfidf_appf", pristineTfidfBase(s, d))
       Similarity.appendToTfidfIndex(idx,
         tfidfTerms(s, d).filter(col("doc_id") % 5 === 4))
       Similarity.tfidfCosinePairsStored(s, idx, threshold = 0.3)
@@ -1445,7 +1356,7 @@ object SimilarityQueries {
     // The oracle replays the frozen contract restricted to
     // delta × base cross pairs.
     QueryDef("join_tfidf_delta_probe", tfidfDeltaProbeOracle) { (s, d) =>
-      Similarity.tfidfDeltaProbe(s, pristineTfidfBase(s, d).getPath,
+      Similarity.tfidfDeltaProbe(s, pristineTfidfBase(s, d),
         tfidfTerms(s, d).filter(col("doc_id") % 5 === 4), threshold = 0.3)
     },
     // the FULL tf-idf index lifecycle (VERDICT r7 #1, r8 #3): build
@@ -1465,10 +1376,7 @@ object SimilarityQueries {
     QueryDef("join_tfidf_append", tfidfOracle) { (s, d) =>
       val pristine = pristineTfidfBase(s, d)
       val phase = new Phases("join_tfidf_append")
-      val idx = Tables.scratchDir("graft_tfidf_append")
-      phase("copy") {
-        graft.sources.Tables.linkCopyDirectory(pristine, new java.io.File(idx))
-      }
+      val idx = phase("copy") { Tables.scratchCopy("graft_tfidf_append", pristine) }
       val st = phase("append") {
         Similarity.appendToTfidfIndex(idx,
           tfidfTerms(s, d).filter(col("doc_id") % 5 === 4))

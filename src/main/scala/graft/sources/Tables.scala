@@ -131,8 +131,61 @@ object Tables {
     s"${tmp.getPath}/${prefix}_p${pid}_${java.util.UUID.randomUUID().toString.take(8)}"
   }
 
+  /** Completion marker of a [[stampedFixture]] dir. */
+  private val ReadyMarker = "_GRAFT_READY"
+
+  /** Source-stamped fixture under java.io.tmpdir: an artifact (arrival
+    * slices, a stored index) derived from `$sfDir/$table.parquet` and
+    * built once per version of that file. The dir is
+    * `name(key)`, key = the first 12 hex chars of
+    * MD5(`sfDir|length_mtime`), so regenerated testdata (same path, new
+    * bytes) gets a new dir instead of a stale artifact; a layout change
+    * bumps the name's prefix.
+    *
+    * A dir holding the ready marker is returned as is. Otherwise the
+    * dir is deleted, `build` writes it (the dir does not exist yet, so
+    * ErrorIfExists writers work), and the marker is created. A build
+    * that throws leaves no dir behind, and a build that brings its own
+    * marker (say, a copied-in one) is rejected rather than served. */
+  def stampedFixture(sfDir: String, table: String, name: String => String)
+      (build: java.io.File => Unit): String = {
+    val src = new java.io.File(s"$sfDir/$table.parquet")
+    // File.length/lastModified return 0 for a missing file, which would
+    // mint a valid-looking "0_0" key and defer the failure to an
+    // obscure downstream read error
+    require(src.exists(), s"fixture source does not exist: $src")
+    val key = java.security.MessageDigest.getInstance("MD5")
+      .digest(s"$sfDir|${src.length()}_${src.lastModified()}".getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString.take(12)
+    val dir = new java.io.File(sys.props("java.io.tmpdir"), name(key))
+    val ready = new java.io.File(dir, ReadyMarker)
+    if (!ready.exists()) {
+      org.apache.commons.io.FileUtils.deleteQuietly(dir)
+      try {
+        build(dir)
+        require(dir.isDirectory, s"fixture build wrote nothing: $dir")
+        require(ready.createNewFile(), s"fixture build left its own $ReadyMarker: $dir")
+      } catch { case e: Throwable =>
+        org.apache.commons.io.FileUtils.deleteQuietly(dir)
+        throw e
+      }
+    }
+    dir.getPath
+  }
+
+  /** A fresh [[scratchDir]] holding a [[linkCopyDirectory]] clone of
+    * `src` — the working copy an append lifecycle mutates while its
+    * pristine fixture stays untouched. */
+  def scratchCopy(prefix: String, src: String): String = {
+    val dst = scratchDir(prefix)
+    linkCopyDirectory(new java.io.File(src), new java.io.File(dst))
+    dst
+  }
+
   /** Hardlink clone of a directory tree: directories are created,
     * files are HARDLINKED (fallback to a real copy across devices).
+    * A [[stampedFixture]]'s ready marker is not cloned: the copy is not
+    * complete until its own owner says so.
     * Safe for immutable-file layouts — parquet indexes only ever ADD
     * files (append = new part files in existing partition dirs), so a
     * linked clone can be appended to without disturbing the source.
@@ -149,7 +202,7 @@ object Tables {
     try walk.forEach { p: Path =>
       val t = dst.toPath.resolve(sp.relativize(p))
       if (Files.isDirectory(p)) { Files.createDirectories(t): Unit }
-      else {
+      else if (p.getFileName.toString != ReadyMarker) {
         Files.createDirectories(t.getParent)
         try Files.createLink(t, p)
         catch { case _: UnsupportedOperationException | _: java.io.IOException =>
