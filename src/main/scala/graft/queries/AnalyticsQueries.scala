@@ -85,10 +85,12 @@ object AnalyticsQueries {
         |  SELECT year(l_shipdate) FROM lineitem GROUP BY 1 HAVING min(l_orderkey) % 2 = 0)
         |GROUP BY o_orderpriority""".stripMargin) { (s, d) =>
       val tmp = Tables.scratchDir("graft_dpp_rt")
-      Tables.table(s, d, "orders")
+      val orders = Tables.table(s, d, "orders")
         .withColumn("o_year", year(col("o_orderdate")))
-        .write.mode("overwrite").partitionBy("o_year").parquet(tmp)
-      val fact = s.read.parquet(tmp)
+      orders.write.mode("overwrite").partitionBy("o_year").parquet(tmp)
+      // partition columns come back last, so the written schema is the
+      // read-back schema as it stands
+      val fact = Tables.readStage(s, tmp, orders.schema)
       // the dim's year set is AGGREGATE-derived (years whose min order
       // key is even) — deliberately not constant-foldable, so the
       // optimizer cannot turn it into a static partition filter and

@@ -56,15 +56,15 @@ object JoinQueries {
     // (thesis Fig 6.4): total-order sort + materialize, then MERGE join
     // of the sorted runs. Same logical result as join_shuffle.
     QueryDef("join_merge_presorted", joinOracle) { (s, d) =>
-      val tmp = s"${sys.props("java.io.tmpdir")}/graft_presorted"
+      val tmp = Tables.scratchDir("graft_presorted")
       val o = Tables.table(s, d, "orders")
         .select(col("o_custkey"), col("o_orderkey"), col("o_orderstatus"),
           col("o_totalprice").cast("decimal(18,2)").as("o_totalprice_d"), col("o_orderpriority"))
       val c = Tables.table(s, d, "customer")
       Tables.writeStage(Joins.presort(o, col("o_custkey"), 8), s"$tmp/orders")
       Tables.writeStage(Joins.presort(c, col("c_custkey"), 8), s"$tmp/customer")
-      val so = Tables.readStage(s, s"$tmp/orders")
-      val sc = Tables.readStage(s, s"$tmp/customer")
+      val so = Tables.readStage(s, s"$tmp/orders", o.schema)
+      val sc = Tables.readStage(s, s"$tmp/customer", c.schema)
       so.hint("MERGE").join(sc, so("o_custkey") === sc("c_custkey"), "inner")
         .select(
           so("o_custkey").as("key"),

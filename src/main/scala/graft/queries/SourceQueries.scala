@@ -25,7 +25,7 @@ object SourceQueries {
         |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
         |  count(*) AS n
         |FROM lineitem GROUP BY l_returnflag""".stripMargin) { (s, d) =>
-      val tmp = s"${sys.props("java.io.tmpdir")}/graft_csv_rt"
+      val tmp = Tables.scratchDir("graft_csv_rt")
       Tables.table(s, d, "lineitem")
         .select(col("l_orderkey"), col("l_quantity"), col("l_returnflag"))
         .write.mode("overwrite").option("header", "false").csv(tmp)
@@ -41,7 +41,7 @@ object SourceQueries {
       "kv_roundtrip",
       """SELECT o_orderpriority AS priority, count(*) AS n, min(o_orderkey) AS min_key
         |FROM orders GROUP BY o_orderpriority""".stripMargin) { (s, d) =>
-      val tmp = s"${sys.props("java.io.tmpdir")}/graft_kv_rt"
+      val tmp = Tables.scratchDir("graft_kv_rt")
       Tables.writeKeyTab(
         Tables.table(s, d, "orders").select(col("o_orderpriority"), col("o_orderkey")),
         tmp)
@@ -59,7 +59,7 @@ object SourceQueries {
       "kv_roundtrip_dsv2",
       """SELECT o_orderpriority AS priority, count(*) AS n, min(o_orderkey) AS min_key
         |FROM orders WHERE o_orderpriority = '2-HIGH' GROUP BY o_orderpriority""".stripMargin) { (s, d) =>
-      val tmp = s"${sys.props("java.io.tmpdir")}/graft_kv_rt_v2"
+      val tmp = Tables.scratchDir("graft_kv_rt_v2")
       Tables.writeKeyTab(
         Tables.table(s, d, "orders").select(col("o_orderpriority"), col("o_orderkey")),
         tmp)
@@ -100,7 +100,7 @@ object SourceQueries {
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
         |FROM orders WHERE year(o_orderdate) = 1997
         |GROUP BY o_orderpriority""".stripMargin) { (s, d) =>
-      val tmp = s"${sys.props("java.io.tmpdir")}/graft_part_rt"
+      val tmp = Tables.scratchDir("graft_part_rt")
       Tables.table(s, d, "orders")
         .withColumn("o_year", year(col("o_orderdate")))
         .write.mode("overwrite").partitionBy("o_year").parquet(tmp)
@@ -116,7 +116,7 @@ object SourceQueries {
       "json_roundtrip",
       """SELECT c_mktsegment, count(*) AS n, min(c_custkey) AS min_key
         |FROM customer GROUP BY c_mktsegment""".stripMargin) { (s, d) =>
-      val tmp = s"${sys.props("java.io.tmpdir")}/graft_json_rt"
+      val tmp = Tables.scratchDir("graft_json_rt")
       Tables.table(s, d, "customer")
         .select(col("c_custkey"), col("c_mktsegment"))
         .write.mode("overwrite").json(tmp)

@@ -1,7 +1,9 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Table loaders / sinks covering the reference's source-sink surface
   * (SURVEY §2.1 S1-S6):
@@ -61,10 +63,70 @@ object Tables {
     *
     * `nanosAsLong` keeps a TIMESTAMP(NANOS) `events.ts` readable (Spark
     * 4 has no nanosecond timestamp type and rejects it by default);
-    * [[withNanosTs]] then canonicalizes whatever encoding arrived. */
+    * [[withNanosTs]] then canonicalizes whatever encoding arrived. The
+    * read is given the file's memoized raw schema ([[schemaOf]]), so it
+    * starts no schema-inference job once that file version is known. */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    withNanosTs(spark.read.parquet(s"$sfDir/$name.parquet"))
+    withNanosTs(memoSchema(spark, sfDir, name).fold(spark.read)(spark.read.schema)
+      .parquet(s"$sfDir/$name.parquet"))
+  }
+
+  /** The RAW schema of `$sfDir/$name.parquet`, as `spark.read.parquet`
+    * infers it under the session's current settings (before
+    * [[withNanosTs]]) — for readers that need the driver file's own
+    * encoding, such as a streaming source over the same file. */
+  def schemaOf(spark: SparkSession, sfDir: String, name: String): StructType =
+    memoSchema(spark, sfDir, name).getOrElse(inferSchema(spark, sfDir, name))
+
+  /** The one schema-inference read of a testdata table. */
+  private def inferSchema(spark: SparkSession, sfDir: String, name: String): StructType =
+    spark.read.parquet(s"$sfDir/$name.parquet").schema
+
+  /** The session confs that change the type parquet inference gives a
+    * column; their values are part of a memo key. */
+  private val SchemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled")
+
+  /** (length, mtime, file key) of a file version. */
+  private type Stamp = (Long, Long, Option[String])
+  private type Entry = (Stamp, StructType)
+
+  /** (canonical path, [[SchemaConfs]] values) → (file stamp, schema).
+    * A schema is session metadata, like a catalog table's stored
+    * schema, not a result: every query still scans its rows. The stamp
+    * is length, mtime and, on a local file system, the file key (inode),
+    * so a rewritten file is inferred again and replaces its entry; the
+    * memo holds one entry per file and conf combination in use. */
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[(String, Seq[String]), Entry]()
+
+  /** Memoized inferred schema of a single parquet file; `None` for a
+    * directory, which is read (and inferred) as before. The inference
+    * job runs outside the map's locks: two threads may both infer a new
+    * file, and `merge` keeps the first entry for that stamp. */
+  private def memoSchema(spark: SparkSession, sfDir: String, name: String): Option[StructType] = {
+    val p = new Path(s"$sfDir/$name.parquet")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // a missing path is left to the read, which fails as it always did
+    val status = try Some(fs.getFileStatus(p)) catch { case _: java.io.FileNotFoundException => None }
+    status.filter(_.isFile).map { st =>
+      val (canon, fileKey) =
+        if (fs.getScheme != "file") (st.getPath.toString, None)
+        else {
+          val real = java.nio.file.Paths.get(st.getPath.toUri).toRealPath()
+          (real.toString, Option(java.nio.file.Files.readAttributes(real,
+            classOf[java.nio.file.attribute.BasicFileAttributes]).fileKey()).map(_.toString))
+        }
+      val stamp: Stamp = (st.getLen, st.getModificationTime, fileKey)
+      val key = (canon, SchemaConfs.map(spark.conf.getOption(_).getOrElse("")))
+      Option(schemas.get(key)).filter(_._1 == stamp).getOrElse {
+        val inferred: Entry = (stamp, inferSchema(spark, sfDir, name))
+        schemas.merge(key, inferred, (old: Entry, neu: Entry) => if (old._1 == stamp) old else neu)
+      }._2
+    }
   }
 
   /** S5: the reference's text sink — `key TAB leftRow,rightRow` lines
@@ -84,6 +146,12 @@ object Tables {
 
   def readStage(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
+
+  /** [[readStage]] of a stage just written from a frame of `schema`:
+    * given that schema (nullable, as parquet reads every column back),
+    * the read starts no schema-inference job. */
+  def readStage(spark: SparkSession, path: String, schema: StructType): DataFrame =
+    spark.read.schema(StructType(schema.map(_.copy(nullable = true)))).parquet(path)
 
   /** S3 interop: genuine Hadoop SequenceFile<Text,Text> write/read for
     * exchanging intermediates with the reference's own pipelines

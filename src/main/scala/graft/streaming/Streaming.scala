@@ -233,7 +233,7 @@ object Streaming {
     * event-time columns are derived at micros grain. */
   def eventsStream(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
+    val schema = graft.sources.Tables.schemaOf(spark, sfDir, "events")
     // the file source needs a directory basePath; the testdata table is a
     // single file inside sfDir → glob-filter it out of the directory
     graft.sources.Tables.withNanosTs(
@@ -721,8 +721,7 @@ object Streaming {
   def streamAvailableNowWithStats(spark: SparkSession, sfDir: String)
       : (DataFrame, Long, Long) = {
     val root = graft.sources.Tables.scratchDir("graft_avnow")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val ev = spark.read.parquet(s"$sfDir/events.parquet")
+    val ev = graft.sources.Tables.table(spark, sfDir, "events")
       .select(col("event_id"), col("user_id"), col("event_type"))
     val schema = ev.schema
     def runOnce(): Long = {
@@ -1178,7 +1177,7 @@ object Streaming {
   def documentsArrivalDir(spark: SparkSession, sfDir: String, nFiles: Int = 4): String =
     graft.sources.Tables.stampedFixture(sfDir, "documents",
         key => s"graft_docs_arrival_v2_${key}_$nFiles") { root =>
-      writeRangeSlices(spark.read.parquet(s"$sfDir/documents.parquet")
+      writeRangeSlices(graft.sources.Tables.table(spark, sfDir, "documents")
         .filter(col("doc_id") % 5 === 0), Seq(col("doc_id")), nFiles, root)
     }
 
@@ -1190,7 +1189,7 @@ object Streaming {
       nFiles: Int = 2): String =
     graft.sources.Tables.stampedFixture(sfDir, "embeddings",
         key => s"graft_emb_arrival_v1_${key}_$nFiles") { root =>
-      writeRangeSlices(spark.read.parquet(s"$sfDir/embeddings.parquet")
+      writeRangeSlices(graft.sources.Tables.table(spark, sfDir, "embeddings")
         .filter(col("vec_id") % 3 === 1), Seq(col("vec_id")), nFiles, root)
     }
 
@@ -1203,7 +1202,7 @@ object Streaming {
   def annGraphIngestIndex(spark: SparkSession, sfDir: String): String =
     graft.sources.Tables.stampedFixture(sfDir, "embeddings",
         key => s"graft_anng_idx_v1_$key") { idxRoot =>
-      val base = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      val base = graft.sources.Tables.table(spark, sfDir, "embeddings")
         .filter(col("vec_id") % 3 =!= 1)
       graft.operators.Similarity.writeKnnGraphIndex(
         graft.operators.Similarity.knnGraphExact(
@@ -1267,7 +1266,7 @@ object Streaming {
     * oracle replays the walks unrolled over all delta vectors at once
     * (the `ann_graph_append` insertion tier with k = 3). */
   def streamAnnGraphIngest(spark: SparkSession, sfDir: String): DataFrame = {
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val emb = graft.sources.Tables.table(spark, sfDir, "embeddings")
     val idxDir = annGraphIngestIndex(spark, sfDir)
     ingestGate(spark, "graft_anng_ingest", emb.schema,
         embeddingsArrivalDir(spark, sfDir)) { batch =>
@@ -1289,7 +1288,7 @@ object Streaming {
     * sink is independent of batch slicing — the oracle is the batch
     * IVF query over all delta vectors at once. */
   def streamAnnIngest(spark: SparkSession, sfDir: String): DataFrame = {
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val emb = graft.sources.Tables.table(spark, sfDir, "embeddings")
     val idxDir = graft.sources.Tables.stampedFixture(sfDir, "embeddings",
         key => s"graft_ann_idx_v1_$key") { idxRoot =>
       graft.operators.Similarity.writeIvfIndex(
@@ -1322,7 +1321,7 @@ object Streaming {
     * and arrival order — the oracle is the batch incremental-dedup
     * query over all deltas at once. */
   def streamLshIngest(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = graft.sources.Tables.table(spark, sfDir, "documents")
     // The corpus index is built ONCE and SERVED FROM STORAGE in the
     // (band, h-bucket) / (doc-bucket) partitioned layout — the round-4
     // cached-index plan degraded to a ~50 s memory-thrash scan per
