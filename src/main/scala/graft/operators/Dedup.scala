@@ -472,7 +472,7 @@ object Dedup {
     *    reads only partitions holding CANDIDATE docs, and candidates
     *    are near-dup-rate-sized, so the dominant (shingle) side of the
     *    index stays delta-bound regardless of corpus size;
-    *  - `meta/` — one row recording (k, numHashes, rows, buckets), so
+    *  - the [[IndexManifest]] — (k, numHashes, rows, buckets), so
     *    serve-side banding can never drift from the stored corpus.
     *
     * [[incrementalDedupStored]] probes this layout with driver-side
@@ -489,7 +489,6 @@ object Dedup {
   def writeIncrementalIndex(base: DataFrame, text: Column, id: Column, path: String,
       k: Int = 3, numHashes: Int = 64, rows: Int = 4,
       bandBuckets0: Int = 0, docBuckets0: Int = 0): Unit = {
-    val spark = base.sparkSession
     val nDocs = if (bandBuckets0 > 0 && docBuckets0 > 0) 0L else base.count()
     val bandBuckets =
       if (bandBuckets0 > 0) bandBuckets0
@@ -510,10 +509,9 @@ object Dedup {
         .withColumn("db", pmod(xxhash64(col("doc_id")), lit(docBuckets.toLong)))
         .repartition(col("db"))
         .write.mode("overwrite").partitionBy("db").parquet(s"$path/shingles")
-      spark.range(1).select(
-          lit(k).as("k"), lit(numHashes).as("num_hashes"), lit(rows).as("rows"),
-          lit(bandBuckets).as("band_buckets"), lit(docBuckets).as("doc_buckets"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+      IndexManifest.write(path, IndexManifest.DedupLsh, Map("k" -> k.toLong,
+        "num_hashes" -> numHashes.toLong, "rows" -> rows.toLong,
+        "band_buckets" -> bandBuckets.toLong, "doc_buckets" -> docBuckets.toLong))
     } finally shBase.unpersist(): Unit
   }
 
@@ -525,18 +523,15 @@ object Dedup {
     * as new files inside their (band, hb) / (db) partitions, so
     * partition pruning over the layout is unchanged and per-append
     * cost is O(delta) — never a rewrite of the stored corpus. Banding
-    * parameters come from `meta/`, so an appended batch can never
+    * parameters come from the manifest, so an appended batch can never
     * drift from the stored contract. (Compaction of many small delta
     * files is [[Layout]]'s compact operator applied per partition —
     * orthogonal, as in any LSM-shaped index.) */
   def appendToIncrementalIndex(path: String, delta: DataFrame, text: Column,
       id: Column): Unit = {
-    val spark = delta.sparkSession
-    val m = spark.read.parquet(s"$path/meta").head()
-    val (k, numHashes, rows) =
-      (m.getAs[Int]("k"), m.getAs[Int]("num_hashes"), m.getAs[Int]("rows"))
-    val bandBuckets = m.getAs[Int]("band_buckets")
-    val docBuckets = m.getAs[Int]("doc_buckets")
+    val m = IndexManifest.read(path, IndexManifest.DedupLsh)
+    val (k, numHashes, rows) = (m.int("k"), m.int("num_hashes"), m.int("rows"))
+    val (bandBuckets, docBuckets) = (m.int("band_buckets"), m.int("doc_buckets"))
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val shDelta = shingles(delta, text, id, k).persist(lvl)
     try {
@@ -599,11 +594,9 @@ object Dedup {
   def incrementalDedupStored(path: String, delta: DataFrame, text: Column, id: Column,
       threshold: Double = 0.8, deltaBroadcast: Boolean = true): DataFrame = {
     val spark = delta.sparkSession
-    val m = spark.read.parquet(s"$path/meta").head()
-    val (k, numHashes, rows) =
-      (m.getAs[Int]("k"), m.getAs[Int]("num_hashes"), m.getAs[Int]("rows"))
-    val bandBuckets = m.getAs[Int]("band_buckets")
-    val docBuckets = m.getAs[Int]("doc_buckets")
+    val m = IndexManifest.read(path, IndexManifest.DedupLsh)
+    val (k, numHashes, rows) = (m.int("k"), m.int("num_hashes"), m.int("rows"))
+    val (bandBuckets, docBuckets) = (m.int("band_buckets"), m.int("doc_buckets"))
     // MEMORY-RESIDENT gate tier (optimization r12, guide §1.2): when
     // the stored index fits the same broadcast-class budget the other
     // local tiers use (`spark.graft.dedup.localGateBytes`, default
@@ -1057,14 +1050,13 @@ object Dedup {
     *    `fb = pmod(fp, fpBuckets)` (fp is already a 64-bit hash):
     *    a delta ingest gate probing new docs against the corpus
     *    touches only its own fingerprints' buckets;
-    *  - `meta/` — (k, w, fp_buckets), so appends can never drift from
-    *    the stored shingling contract.
+    *  - the [[IndexManifest]] — (k, w, fp_buckets), so appends can
+    *    never drift from the stored shingling contract.
     *
     * Bucket count auto-sizes from the corpus (≤ 0 → nDocs/2000
     * clamped to [1, 256]), the [[writeIncrementalIndex]] rule. */
   def writeWinnowIndex(docs: DataFrame, text: Column, id: Column, path: String,
       k: Int = 3, w: Int = 4, fpBuckets0: Int = 0): Unit = {
-    val spark = docs.sparkSession
     val nDocs = if (fpBuckets0 > 0) 0L else docs.count()
     val fpBuckets = if (fpBuckets0 > 0) fpBuckets0
       else math.max(1L, math.min(256L, nDocs / 2000L)).toInt
@@ -1073,9 +1065,8 @@ object Dedup {
       .withColumn("fb", pmod(col("fp"), lit(fpBuckets.toLong)))
       .repartition(col("fb"))
       .write.mode("overwrite").partitionBy("fb").parquet(s"$path/fps")
-    spark.range(1).select(
-        lit(k).as("k"), lit(w).as("w"), lit(fpBuckets).as("fp_buckets"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    IndexManifest.write(path, IndexManifest.Winnow,
+      Map("k" -> k.toLong, "w" -> w.toLong, "fp_buckets" -> fpBuckets.toLong))
   }
 
   /** Fold a delta batch into a [[writeWinnowIndex]] layout — O(delta):
@@ -1086,10 +1077,9 @@ object Dedup {
     * LSM-shaped index here. */
   def appendToWinnowIndex(path: String, delta: DataFrame, text: Column,
       id: Column): Unit = {
-    val spark = delta.sparkSession
-    val m = spark.read.parquet(s"$path/meta").head()
-    val (k, w) = (m.getAs[Int]("k"), m.getAs[Int]("w"))
-    val fpBuckets = m.getAs[Int]("fp_buckets")
+    val m = IndexManifest.read(path, IndexManifest.Winnow)
+    val (k, w) = (m.int("k"), m.int("w"))
+    val fpBuckets = m.int("fp_buckets")
     CorpusOps.winnowingFingerprints(delta, text, id, k, w)
       .select(col("doc_id"), col("fp")).distinct()
       .withColumn("fb", pmod(col("fp"), lit(fpBuckets.toLong)))
@@ -1115,10 +1105,12 @@ object Dedup {
     * dedup_winnowing_stored oracle is shared with dedup_winnowing). */
   def winnowingOverlapStored(spark: SparkSession, path: String,
       minShared: Int = 2, threshold: Double = 0.5,
-      maxFpDf: Option[Int] = None): DataFrame =
+      maxFpDf: Option[Int] = None): DataFrame = {
+    IndexManifest.read(path, IndexManifest.Winnow): Unit
     winnowingOverlapFrom(
       spark.read.parquet(s"$path/fps").select(col("doc_id"), col("fp")),
       minShared, threshold, maxFpDf)
+  }
 
   /** Soft dedup: keep EVERY copy but weight each document by
     * 1/|its near-dup cluster| in exact ppm — the sampling-weight

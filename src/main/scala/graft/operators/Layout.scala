@@ -205,3 +205,81 @@ object Layout {
       .write.mode("overwrite").parquet(outDir)
   }
 }
+
+/** A stored index's parameters (bucket counts, shingling contract,
+  * staleness epochs): one JSON manifest per index root,
+  * `{"format":1,"family":…,"fields":{name: long, …}}`. A read runs no
+  * Spark job and fails, naming the file, when the manifest is missing,
+  * of an unknown format or of another family. A write commits by rename
+  * (temp file, forced, atomically moved over): a crash leaves the old
+  * or the new manifest, and a hardlinked copy
+  * ([[graft.sources.Tables.linkCopyDirectory]]) never changes its
+  * source's. The leading `_` keeps it out of Spark's listings.
+  * Local file systems only, like the staleness probes: another URI
+  * scheme (hdfs://, s3://) fails closed; an object store would need a
+  * conditional put in place of the rename. */
+object IndexManifest {
+  import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+  import scala.jdk.CollectionConverters._
+
+  val Tfidf = "tfidf"
+  val IvfPq = "ivfpq"
+  val KnnGraph = "knn-graph"
+  val DedupLsh = "dedup-lsh"
+  val Winnow = "winnow"
+
+  private val FileName = "_graft_index.json"
+  private val Format = 1
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** A read manifest; `file` is where it came from, for messages. */
+  final case class Manifest(file: Path, fields: Map[String, Long]) {
+    def long(name: String): Long = fields.getOrElse(name,
+      throw new IllegalStateException(s"index manifest $file has no field $name"))
+    def int(name: String): Int = Math.toIntExact(long(name))
+  }
+
+  /** The manifest file of the index rooted at `path`. */
+  def file(path: String): Path = {
+    val uri = new org.apache.hadoop.fs.Path(path).toUri
+    if (uri.getScheme != null && uri.getScheme != "file")
+      throw new UnsupportedOperationException(s"index manifest of $path: not a local file system")
+    Paths.get(uri.getPath).resolve(FileName)
+  }
+
+  def write(path: String, family: String, fields: Map[String, Long]): Unit = {
+    val target = file(path)
+    val bytes = mapper.writeValueAsBytes(Map[String, AnyRef]("format" -> Int.box(Format),
+      "family" -> family, "fields" -> fields.map { case (k, v) => k -> Long.box(v) }.asJava).asJava)
+    Files.createDirectories(target.getParent)
+    val tmp = target.resolveSibling(s"$FileName.${java.util.UUID.randomUUID()}.tmp")
+    try {
+      val ch = java.nio.channels.FileChannel.open(tmp,
+        StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
+      try {
+        val buf = java.nio.ByteBuffer.wrap(bytes)
+        while (buf.hasRemaining) ch.write(buf)
+        ch.force(true)
+      } finally ch.close()
+      Files.move(tmp, target,
+        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    } finally Files.deleteIfExists(tmp): Unit
+  }
+
+  def read(path: String, family: String): Manifest = {
+    val f = file(path)
+    require(Files.isRegularFile(f),
+      s"no index manifest at $f: not a stored index, or one of an older layout (rebuild it)")
+    val json = try mapper.readTree(f.toFile) catch {
+      case _: com.fasterxml.jackson.core.JsonProcessingException => mapper.missingNode()
+    }
+    val format = json.path("format")
+    require(format.isInt && format.intValue == Format, s"index manifest $f has unknown format '$format'")
+    val got = json.path("family").asText("")
+    require(got == family, s"index manifest $f is a $got index, not $family")
+    val fields = json.path("fields").properties().asScala.map(e => e.getKey -> e.getValue).toMap
+    require(fields.values.forall(v => v.isIntegralNumber && v.canConvertToLong),
+      s"index manifest $f has a field that is not a long")
+    Manifest(f, fields.map { case (k, v) => k -> v.longValue })
+  }
+}

@@ -46,11 +46,6 @@ final case class TfidfStaleness(appendedDocs: Long, statN: Long,
 // put it in the closure's captured args, and executors deserialize the
 // (stateless) marker
 object Similarity extends Serializable {
-  /** One-time (per path, per process) stderr note when a staleness
-    * probe hits a pre-counter index layout (ADVICE r11): the recount
-    * is a full distinct-count over the stored corpus on EVERY probe
-    * until the repair verb persists the counter — an operator should
-    * see that O(n)-per-probe mode named, not discover it in a profile. */
   /** Scalar twins of the Column hot path, bit-identical by
     * construction (used by the task-local seed/walk tiers):
     * left-to-right dot fold from 0.0 ≡ [[graft.functions.DotProduct]]
@@ -64,16 +59,6 @@ object Similarity extends Serializable {
   }
   private[graft] def microsOf(c: Double): Long = BigDecimal.decimal(c * 1e6)
     .setScale(0, scala.math.BigDecimal.RoundingMode.HALF_UP).toLong
-
-  private val legacyRecountWarned =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private def warnLegacyRecount(path: String, family: String,
-      repairVerb: String): Unit =
-    if (legacyRecountWarned.add(s"$family|$path"))
-      System.err.println(s"[graft] $family index at $path predates the " +
-        s"persisted staleness counter — this probe (and every later one) " +
-        s"recounts the stored corpus, O(n) per probe; run $repairVerb once " +
-        "to persist the counter and restore O(1) staleness reads")
 
   import Dedup.{dot, withNorm}
 
@@ -593,9 +578,10 @@ object Similarity extends Serializable {
     * shared [[unitVectors]] tail. */
   private def derivedFromTf(tok: DataFrame, maxDfPpm: Long,
       nDocs0: Option[Long] = None): (DataFrame, DataFrame) = {
-    // build/refresh callers already count the corpus for meta's stat_n —
-    // passing it in drops the embedded distinct-count aggregate (and its
-    // broadcast join) from the df/idf subtree (optimization r13)
+    // build/refresh callers already count the corpus for the
+    // manifest's stat_n — passing it in drops the embedded
+    // distinct-count aggregate (and its broadcast join) from the df/idf
+    // subtree (optimization r13)
     val n = nDocs0 match {
       case Some(v) => tok.sparkSession.range(1).select(lit(v).as("n"))
       case None => tok.select(col("doc_id")).distinct().agg(count(lit(1)).as("n"))
@@ -716,8 +702,9 @@ object Similarity extends Serializable {
     *  - `vectors/` — (doc_id, vec sparse map), dir-partitioned by
     *    `db = pmod(xxhash64(doc_id), docBuckets)`: the verify stage of
     *    a delta probe reads candidate docs' buckets only;
-    *  - `meta/` — (max_df_ppm, term_buckets, doc_buckets), so serving
-    *    can never drift from the stored contract.
+    *  - the [[IndexManifest]] — (max_df_ppm, term_buckets,
+    *    doc_buckets, stat_n), so serving can never drift from the
+    *    stored contract.
     *
     * `rem` (see [[withRem]]) is threshold-independent and stored, so
     * serving skips both corpus windows as well as the aggregations. At
@@ -734,7 +721,7 @@ object Similarity extends Serializable {
     val tok = tfTable(terms)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // always counted: stat_n (docs the frozen statistics cover) is
-    // the denominator of the staleness budget, stored in meta — and
+    // the denominator of the staleness budget, stored in the manifest — and
     // passed into the idf derivation so its subtree skips a second
     // distinct-count aggregate
     val nDocs = tok.select(col("doc_id")).distinct().count()
@@ -751,12 +738,18 @@ object Similarity extends Serializable {
         .repartition(col("tb"))
         .write.mode("overwrite").partitionBy("tb").parquet(s"$path/tf")
       writeTfidfDerived(u, idf, path, termBuckets, docBuckets)
-      terms.sparkSession.range(1).select(
-          lit(maxDfPpm).as("max_df_ppm"), lit(termBuckets).as("term_buckets"),
-          lit(docBuckets).as("doc_buckets"), lit(nDocs).as("stat_n"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-      graft.sources.Tables.deleteRecursive(s"$path/staleness")
+      writeTfidfManifest(path, maxDfPpm, termBuckets, docBuckets, nDocs)
     } finally { u.unpersist(); tok.unpersist(): Unit }
+  }
+
+  /** Commit a (re)built tf-idf layout: its manifest, then a fresh
+    * staleness clock. */
+  private def writeTfidfManifest(path: String, maxDfPpm: Long,
+      termBuckets: Int, docBuckets: Int, nDocs: Long): Unit = {
+    IndexManifest.write(path, IndexManifest.Tfidf, Map("max_df_ppm" -> maxDfPpm,
+      "term_buckets" -> termBuckets.toLong, "doc_buckets" -> docBuckets.toLong,
+      "stat_n" -> nDocs))
+    graft.sources.Tables.deleteRecursive(s"$path/staleness")
   }
 
   /** The derived serving tier of a [[writeTfidfIndex]] layout:
@@ -815,9 +808,8 @@ object Similarity extends Serializable {
     * the repair re-derives every other store from tf alone. */
   def appendToTfidfIndex(path: String, delta: DataFrame): TfidfStaleness = {
     val spark = delta.sparkSession
-    val m = spark.read.parquet(s"$path/meta").head()
-    val termBuckets = m.getAs[Int]("term_buckets")
-    val docBuckets = m.getAs[Int]("doc_buckets")
+    val m = IndexManifest.read(path, IndexManifest.Tfidf)
+    val (termBuckets, docBuckets) = (m.int("term_buckets"), m.int("doc_buckets"))
     val tok = tfTable(delta)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // partition-prune the frozen-idf lookup to the delta's touched
@@ -879,28 +871,10 @@ object Similarity extends Serializable {
   /** Cumulative staleness of a [[writeTfidfIndex]] layout since its
     * last build/[[refreshTfidfIndex]] — a sum over the per-batch
     * `staleness/` rows (one tiny row per append) against `stat_n`
-    * from meta. O(#batches), never a corpus scan. */
+    * from the manifest. O(#batches), never a corpus scan. */
   def tfidfStaleness(spark: org.apache.spark.sql.SparkSession,
       path: String): TfidfStaleness = {
-    val meta = spark.read.parquet(s"$path/meta")
-    // pre-stat_n format (ADVICE r9/r10): an index written before the
-    // staleness counters has no stat_n column — recount it from the
-    // stored raw tf (the exact value a build would have recorded)
-    // WITHOUT persisting anything: staleness is a READ and must stay
-    // pure (two concurrent readers racing a delete-then-write meta
-    // overwrite, or a read-only mount, were the r10 failure modes).
-    // The recount is re-paid per probe on an old-format index; the
-    // PERSISTED upgrade is [[repairTfidfIndex]]'s job (its refresh
-    // rewrites meta with stat_n) — run the repair verb once to make
-    // later staleness reads O(1) again.
-    val statN =
-      if (meta.schema.fieldNames.contains("stat_n"))
-        meta.head().getAs[Long]("stat_n")
-      else {
-        warnLegacyRecount(path, "tfidf", "repairTfidfIndex")
-        spark.read.parquet(s"$path/tf")
-          .select(col("doc_id")).distinct().count()
-      }
+    val statN = IndexManifest.read(path, IndexManifest.Tfidf).long("stat_n")
     if (!new java.io.File(s"$path/staleness").exists())
       return TfidfStaleness(0L, statN, 0L, 0L)
     val r = spark.read.parquet(s"$path/staleness")
@@ -941,10 +915,7 @@ object Similarity extends Serializable {
     * ([[tfTable]] aggregates per pair): distinct-rewrite tf, then
     * [[refreshTfidfIndex]] re-derives every serving store (and the
     * statistics clock) from it. Full rewrite — the rare recovery
-    * path; routine drift repair is the refresh alone. Repair doubles
-    * as the explicit FORMAT-UPGRADE verb (ADVICE r10): the refresh
-    * rewrites meta with a fresh stat_n, so staleness reads on a
-    * pre-stat_n layout stay pure and become O(1) after one repair. */
+    * path; routine drift repair is the refresh alone. */
   def repairTfidfIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = {
     Layout.distinctRewrite(spark, s"$path/tf", "tb")
@@ -959,24 +930,11 @@ object Similarity extends Serializable {
     * construction, so distinct-rewrite restores the single-applied
     * state; a following [[pruneKnnGraphIndex]] (which also collapses
     * duplicates in the partitions it rewrites) re-caps degrees if the
-    * replay pushed nodes past the bound. Repair is also the explicit
-    * FORMAT-UPGRADE verb (ADVICE r10): a pre-base_nodes meta is
-    * rewritten here with the recounted node total, so staleness reads
-    * ([[knnGraphStaleness]]) stay pure and O(1) afterwards. */
+    * replay pushed nodes past the bound. */
   def repairKnnGraphIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = {
     Layout.distinctRewrite(spark, s"$path/adj", "sb")
     Layout.distinctRewrite(spark, s"$path/vectors", "db")
-    val meta = spark.read.parquet(s"$path/meta")
-    if (!meta.schema.fieldNames.contains("base_nodes")) {
-      val mm = meta.head()
-      val n = spark.read.parquet(s"$path/vectors").count()
-      spark.range(1).select(
-          lit(mm.getAs[Int]("src_buckets")).as("src_buckets"),
-          lit(mm.getAs[Int]("doc_buckets")).as("doc_buckets"),
-          lit(n).as("base_nodes"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    }
   }
 
   /** Delta INGEST-GATE probe against a [[writeTfidfIndex]] layout —
@@ -992,8 +950,7 @@ object Similarity extends Serializable {
     * shared terms (the direct-strategy accumulation, exact DECIMAL). */
   def tfidfDeltaProbe(spark: org.apache.spark.sql.SparkSession, path: String,
       delta: DataFrame, threshold: Double): DataFrame = {
-    val m = spark.read.parquet(s"$path/meta").head()
-    val termBuckets = m.getAs[Int]("term_buckets")
+    val termBuckets = IndexManifest.read(path, IndexManifest.Tfidf).int("term_buckets")
     val tok = tfTable(delta)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -1037,25 +994,20 @@ object Similarity extends Serializable {
     * drift budget, not per delta. */
   def refreshTfidfIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = {
-    val m = spark.read.parquet(s"$path/meta").head()
-    val maxDfPpm = m.getAs[Long]("max_df_ppm")
-    val termBuckets = m.getAs[Int]("term_buckets")
-    val docBuckets = m.getAs[Int]("doc_buckets")
+    val m = IndexManifest.read(path, IndexManifest.Tfidf)
+    val maxDfPpm = m.long("max_df_ppm")
+    val (termBuckets, docBuckets) = (m.int("term_buckets"), m.int("doc_buckets"))
     val tok = spark.read.parquet(s"$path/tf")
       .select(col("doc_id"), col("t"), col("tf"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // the refreshed statistics cover the FULL stored corpus: count it
-    // once, up front — stat_n for the meta rewrite AND the literal n
+    // once, up front — stat_n for the manifest AND the literal n
     // the idf derivation embeds (one distinct-count aggregate, not two)
     val nDocs = tok.select(col("doc_id")).distinct().count()
     val (idf, u) = derivedFromTf(tok, maxDfPpm, Some(nDocs))
     try {
       writeTfidfDerived(u, idf, path, termBuckets, docBuckets)
-      spark.range(1).select(
-          lit(maxDfPpm).as("max_df_ppm"), lit(termBuckets).as("term_buckets"),
-          lit(docBuckets).as("doc_buckets"), lit(nDocs).as("stat_n"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-      graft.sources.Tables.deleteRecursive(s"$path/staleness")
+      writeTfidfManifest(path, maxDfPpm, termBuckets, docBuckets, nDocs)
     } finally { u.unpersist(); tok.unpersist(): Unit }
   }
 
@@ -1083,6 +1035,7 @@ object Similarity extends Serializable {
   def tfidfCosinePairsStored(spark: org.apache.spark.sql.SparkSession,
       path: String, threshold: Double, strategy: String = "auto",
       directRowBudget: Long = 200000000L): DataFrame = {
+    IndexManifest.read(path, IndexManifest.Tfidf): Unit
     val posts = spark.read.parquet(s"$path/postings")
       .select(col("doc_id"), col("t"), col("u"), col("rem"))
     pairsFromPostings(posts.select(col("doc_id"), col("t"), col("u")),
@@ -1154,16 +1107,16 @@ object Similarity extends Serializable {
     * re-rank tier): corpus vectors assigned to coarse centroids and
     * written PARTITIONED BY centroid id, each row carrying its m-byte
     * PQ code array NEXT TO the exact vector (the re-rank tier; codes
-    * alone are the scan tier), plus the tiny centroid/codebook/meta
-    * tables. A query batch partition-prunes to its probed lists, ADC-
-    * scans the CODES (m integer adds per candidate), and re-ranks only
-    * the shortlist against the exact vectors. Codebooks are the
-    * deterministic first-`nCodes` anchors ([[topKPqAdc]]'s contract —
-    * swap per-subspace k-means in production, same layout). */
+    * alone are the scan tier), plus tiny centroid/codebook tables and
+    * the [[IndexManifest]]. A query batch partition-prunes to its
+    * probed lists, ADC-scans the CODES (m integer adds per candidate),
+    * and re-ranks only the shortlist against the exact vectors.
+    * Codebooks are the deterministic first-`nCodes` anchors
+    * ([[topKPqAdc]]'s contract — swap per-subspace k-means in
+    * production, same layout). */
   def writeIvfPqIndex(emb: DataFrame, vec: Column, id: Column,
       centroids: DataFrame, path: String,
       m: Int = 8, subDim: Int = 8, nCodes: Int = 8): Unit = {
-    val spark = emb.sparkSession
     val e = withNorm(emb, vec, id)
     val sub = e.select(col("vid"), explode(expr(
         s"""transform(sequence(0, ${m - 1}),
@@ -1189,9 +1142,8 @@ object Similarity extends Serializable {
       .write.mode("overwrite").partitionBy("cid").parquet(s"$path/vectors")
     centroids.write.mode("overwrite").parquet(s"$path/centroids")
     cb.write.mode("overwrite").parquet(s"$path/codebooks")
-    spark.range(1).select(lit(m).as("m"), lit(subDim).as("sub_dim"),
-        lit(nCodes).as("n_codes"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    IndexManifest.write(path, IndexManifest.IvfPq,
+      Map("m" -> m.toLong, "sub_dim" -> subDim.toLong))
   }
 
   /** Serve top-k from a [[writeIvfPqIndex]] layout: probe lists from
@@ -1213,8 +1165,8 @@ object Similarity extends Serializable {
       id: Column, k: Int, nProbe: Int, shortlist: Int,
       keep: Column = lit(true)): DataFrame = {
     val spark = queries.sparkSession
-    val meta = spark.read.parquet(s"$path/meta").head()
-    val (m, subDim) = (meta.getAs[Int]("m"), meta.getAs[Int]("sub_dim"))
+    val meta = IndexManifest.read(path, IndexManifest.IvfPq)
+    val (m, subDim) = (meta.int("m"), meta.int("sub_dim"))
     val cents = spark.read.parquet(s"$path/centroids")
     val cb = spark.read.parquet(s"$path/codebooks")
     val q2 = withNorm(queries, vec, id)
@@ -1457,7 +1409,8 @@ object Similarity extends Serializable {
     *    (typically one per quantizer region via [[ivfAssignments]]:
     *    the SPANN/IVF-HNSW hybrid posture — probe the best regions'
     *    entries, then WALK);
-    *  - `meta/` — bucket counts.
+    *  - the [[IndexManifest]] — bucket counts, `base_nodes` and, with a
+    *    stored quantizer, the entry clock `entry_built_n`.
     *
     * Bucket counts auto-size from the corpus like every stored index
     * here (≤ 0 → n/100 clamped to [1, 64]). */
@@ -1528,9 +1481,8 @@ object Similarity extends Serializable {
       id: Column, entryIds: DataFrame, path: String,
       srcBuckets0: Int = 0, docBuckets0: Int = 0,
       centroids: DataFrame = null): Unit = {
-    val spark = emb.sparkSession
     // always counted: base_nodes denominates the insert-volume
-    // staleness budget ([[knnGraphStaleness]]), stored in meta
+    // staleness budget ([[knnGraphStaleness]]), stored in the manifest
     val n = emb.count()
     val srcBuckets = if (srcBuckets0 > 0) srcBuckets0
       else math.max(1L, math.min(64L, n / 100L)).toInt
@@ -1556,20 +1508,17 @@ object Similarity extends Serializable {
     // refreshable after appends shift region membership. Centroids are
     // corpus members by construction ([[firstNCentroids]]), so every
     // centroid's region holds at least the centroid itself and a
-    // region-restricted seed can never come up empty. Legacy layouts
+    // region-restricted seed can never come up empty. Layouts
     // without `centroids/` keep the all-entries seed.
-    if (centroids != null) {
+    if (centroids != null)
       centroids.select(col("cid"), col("cv"), col("cn"))
         .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-      // entry clock epoch ([[knnGraphEntryStaleness]]): the node count
-      // the entry sample was drawn from
-      spark.range(1).select(lit(n).as("entry_built_n"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/entry_meta")
-    }
-    spark.range(1).select(
-        lit(srcBuckets).as("src_buckets"), lit(docBuckets).as("doc_buckets"),
-        lit(n).as("base_nodes"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    // entry clock epoch ([[knnGraphEntryStaleness]]): the node count the
+    // entry sample was drawn from — kept only where entries can refresh
+    IndexManifest.write(path, IndexManifest.KnnGraph, Map(
+        "src_buckets" -> srcBuckets.toLong, "doc_buckets" -> docBuckets.toLong,
+        "base_nodes" -> n) ++
+      (if (centroids != null) Map("entry_built_n" -> n) else Map.empty))
     graft.sources.Tables.deleteRecursive(s"$path/staleness")
   }
 
@@ -1602,15 +1551,14 @@ object Similarity extends Serializable {
       rounds: Int): Long = {
     require(beamWidth >= kGraph, s"beamWidth ($beamWidth) must be >= kGraph ($kGraph)")
     val spark = delta.sparkSession
-    val m = spark.read.parquet(s"$path/meta").head()
-    val srcBuckets = m.getAs[Int]("src_buckets")
-    val docBuckets = m.getAs[Int]("doc_buckets")
+    val m = IndexManifest.read(path, IndexManifest.KnnGraph)
+    val (srcBuckets, docBuckets) = (m.int("src_buckets"), m.int("doc_buckets"))
     // materialize the insertion walks BEFORE any write: the beam reads
     // the same stores the appends below mutate. With a stored
     // quantizer the walk is REGION-seeded (VERDICT r11 #1): each delta
     // seeds from its own region's entries — |delta| × E seed scores
     // instead of |delta| × regions × E, the measured ingest dominator
-    // at 1 M. Legacy layouts (no centroids/) keep the all-entries seed.
+    // at 1 M. Layouts with no centroids/ keep the all-entries seed.
     val (edges, _, nEdges) = Iterate.ckpt(
       beamWalkKnnStored(path, delta, vec, id, k = kGraph, nProbe,
           beamWidth, rounds, keep = None, widenCap = 1,
@@ -1640,34 +1588,25 @@ object Similarity extends Serializable {
     inserted
   }
 
+  /** Σ `n_inserted` over the per-batch `staleness/` rows (0 when none). */
+  private def knnGraphInserted(spark: org.apache.spark.sql.SparkSession,
+      path: String): Long =
+    if (!new java.io.File(s"$path/staleness").exists()) 0L
+    else spark.read.parquet(s"$path/staleness")
+      .agg(coalesce(sum(col("n_inserted")), lit(0L))).head().getLong(0)
+
   /** Cumulative insert volume of a [[writeKnnGraphIndex]] layout since
     * its last build/[[pruneKnnGraphIndex]] — (insertedNodes, baseNodes,
     * insertedPpm). A sum over the per-batch `staleness/` rows against
-    * `base_nodes` from meta; never an edge scan (per-node degree drift
-    * is BOUNDED by this volume — each inserted neighbor hands a stored
-    * node at most one reverse edge — so the O(1) counter is the honest
-    * budget proxy, and the prune itself re-checks actual degrees for
-    * free before rewriting anything). */
+    * `base_nodes` from the manifest; never an edge scan (per-node
+    * degree drift is BOUNDED by this volume — each inserted neighbor
+    * hands a stored node at most one reverse edge — so the O(1)
+    * counter is the honest budget proxy, and the prune itself
+    * re-checks actual degrees for free before rewriting anything). */
   def knnGraphStaleness(spark: org.apache.spark.sql.SparkSession,
       path: String): (Long, Long, Long) = {
-    val meta = spark.read.parquet(s"$path/meta")
-    // pre-base_nodes format (ADVICE r9/r10): recount from the stored
-    // vectors (the value a fresh build records) WITHOUT persisting —
-    // staleness is a READ and must stay pure (concurrent readers race
-    // a delete-then-write meta overwrite; read-only mounts fail it
-    // outright). The recount is re-paid per probe on an old-format
-    // index; [[repairKnnGraphIndex]] persists the upgrade explicitly.
-    val base =
-      if (meta.schema.fieldNames.contains("base_nodes"))
-        meta.head().getAs[Long]("base_nodes")
-      else {
-        warnLegacyRecount(path, "knn-graph", "repairKnnGraphIndex")
-        spark.read.parquet(s"$path/vectors").count()
-      }
-    val ins =
-      if (!new java.io.File(s"$path/staleness").exists()) 0L
-      else spark.read.parquet(s"$path/staleness")
-        .agg(coalesce(sum(col("n_inserted")), lit(0L))).head().getLong(0)
+    val base = IndexManifest.read(path, IndexManifest.KnnGraph).long("base_nodes")
+    val ins = knnGraphInserted(spark, path)
     val ppm = if (base == 0L) Long.MaxValue else ins * 1000000L / base
     (ins, base, ppm)
   }
@@ -1686,12 +1625,9 @@ object Similarity extends Serializable {
     val stale = ppm > maxInsertedPpm
     if (stale) {
       pruneKnnGraphIndex(spark, path, degreeCap)
-      val m = spark.read.parquet(s"$path/meta").head()
-      spark.range(1).select(
-          lit(m.getAs[Int]("src_buckets")).as("src_buckets"),
-          lit(m.getAs[Int]("doc_buckets")).as("doc_buckets"),
-          lit(base + ins).as("base_nodes"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+      val m = IndexManifest.read(path, IndexManifest.KnnGraph)
+      IndexManifest.write(path, IndexManifest.KnnGraph,
+        m.fields + ("base_nodes" -> (base + ins)))
       graft.sources.Tables.deleteRecursive(s"$path/staleness")
     }
     stale
@@ -1706,26 +1642,17 @@ object Similarity extends Serializable {
     * ever-staler snapshot. This clock is INDEPENDENT of the prune
     * clock ([[knnGraphStaleness]]): a prune re-caps degrees without
     * touching entries, and both derive the current node count as
-    * `base_nodes + Σ staleness` so neither resets the other. Layouts
-    * written before `entry_meta/` fall back to `base_nodes` as the
-    * entry epoch — O(1); exact before the first prune, and after one
-    * it UNDERCOUNTS entry staleness (base_nodes advanced past the
-    * entry build), so legacy layouts should refresh entries once and
-    * gain the real clock. */
+    * `base_nodes + Σ staleness` so neither resets the other. A layout
+    * with no stored quantizer has no entry clock (`entry_built_n`; its
+    * entries cannot refresh) and falls back to `base_nodes` as the
+    * entry epoch — exact before the first prune, an undercount after
+    * one (base_nodes advances past the entry build). */
   def knnGraphEntryStaleness(spark: org.apache.spark.sql.SparkSession,
       path: String): (Long, Long, Long) = {
-    val m = spark.read.parquet(s"$path/meta").head()
-    val base = m.getAs[Long]("base_nodes")
-    val ins =
-      if (!new java.io.File(s"$path/staleness").exists()) 0L
-      else spark.read.parquet(s"$path/staleness")
-        .agg(coalesce(sum(col("n_inserted")), lit(0L))).head().getLong(0)
-    val current = base + ins
-    val builtN =
-      if (new java.io.File(s"$path/entry_meta").exists())
-        spark.read.parquet(s"$path/entry_meta").head()
-          .getAs[Long]("entry_built_n")
-      else base
+    val m = IndexManifest.read(path, IndexManifest.KnnGraph)
+    val base = m.long("base_nodes")
+    val current = base + knnGraphInserted(spark, path)
+    val builtN = m.fields.getOrElse("entry_built_n", base)
     val since = math.max(0L, current - builtN)
     val ppm = if (builtN == 0L) Long.MaxValue else since * 1000000L / builtN
     (since, builtN, ppm)
@@ -1748,7 +1675,7 @@ object Similarity extends Serializable {
     * the newest epoch and recovers the shifted-distribution decay.
     * One corpus pass (broadcast assignment + windows on cid) + a
     * broadcast-sized overwrite of `entry/` — the same budget class as
-    * [[refreshTfidfIndex]]. Resets the entry clock (`entry_meta/`).
+    * [[refreshTfidfIndex]]. Resets the entry clock (`entry_built_n`).
     * Returns the entry count. */
   def refreshKnnGraphEntries(spark: org.apache.spark.sql.SparkSession,
       path: String, perRegion: Int): Long = {
@@ -1764,14 +1691,9 @@ object Similarity extends Serializable {
       .select(col("vid"), col("v"), col("nrm"))
     entries.coalesce(1).write.mode("overwrite").parquet(s"$path/entry")
     val n = spark.read.parquet(s"$path/entry").count()
-    val m = spark.read.parquet(s"$path/meta").head()
-    val insNow =
-      if (!new java.io.File(s"$path/staleness").exists()) 0L
-      else spark.read.parquet(s"$path/staleness")
-        .agg(coalesce(sum(col("n_inserted")), lit(0L))).head().getLong(0)
-    spark.range(1).select(
-        lit(m.getAs[Long]("base_nodes") + insNow).as("entry_built_n"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/entry_meta")
+    val m = IndexManifest.read(path, IndexManifest.KnnGraph)
+    IndexManifest.write(path, IndexManifest.KnnGraph, m.fields +
+      ("entry_built_n" -> (m.long("base_nodes") + knnGraphInserted(spark, path))))
     n
   }
 
@@ -1989,8 +1911,7 @@ object Similarity extends Serializable {
         s"fan-in buffered by the keep rule (got bridge = $bridge)")
     require(alpha >= 1.0, s"alpha must be >= 1: $alpha")
     import spark.implicits._
-    val srcBuckets = spark.read.parquet(s"$path/meta").head()
-      .getAs[Int]("src_buckets")
+    val srcBuckets = IndexManifest.read(path, IndexManifest.KnnGraph).int("src_buckets")
     val v = spark.read.parquet(s"$path/vectors")
       .select(col("vid"), col("v"), col("nrm"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -2170,8 +2091,6 @@ object Similarity extends Serializable {
     val eadj = knnGraphExact(entries, col("v"), col("vid"), kEntry)
       .unionByName(chain).distinct()
     eadj.coalesce(1).write.mode("overwrite").parquet(s"$path/entry_adj")
-    spark.range(1).select(lit(kEntry).as("k_entry"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/entry_graph_meta")
     spark.read.parquet(s"$path/entry_adj").count()
   }
 
@@ -2423,6 +2342,7 @@ object Similarity extends Serializable {
     require(seedOverride.isEmpty || (keep.isEmpty && widenCap == 1 && !regionSeed),
       "an external seed ((qid, vid, sm) micros rows) composes only with the plain walk")
     val spark = queries.sparkSession
+    val m = IndexManifest.read(path, IndexManifest.KnnGraph)
     // MEMORY-RESIDENT serve tier (optimization r12, guide §1.2 "the
     // distributed algorithm" + §2.4 "remove shuffles outright"): when
     // the WHOLE stored graph fits the same broadcast-class budget the
@@ -2441,9 +2361,7 @@ object Similarity extends Serializable {
         Tier.localStore(spark, "beamWalkKnnStored", Tier.AnnWalkBytes, path))
       return localBeamWalkKnnStored(path, queries, vec, id, k, nProbe,
         beamWidth, rounds, regionSeed)
-    val m = spark.read.parquet(s"$path/meta").head()
-    val srcBuckets = m.getAs[Int]("src_buckets")
-    val docBuckets = m.getAs[Int]("doc_buckets")
+    val (srcBuckets, docBuckets) = (m.int("src_buckets"), m.int("doc_buckets"))
     val adjAll = spark.read.parquet(s"$path/adj")
     val vecAll = spark.read.parquet(s"$path/vectors")
     val entries = spark.read.parquet(s"$path/entry")

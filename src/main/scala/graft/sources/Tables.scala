@@ -202,13 +202,17 @@ object Tables {
   /** Completion marker of a [[stampedFixture]] dir. */
   private val ReadyMarker = "_GRAFT_READY"
 
+  /** Layout version in every [[stampedFixture]] key: bumping it rebuilds
+    * every fixture once. 2: stored indexes carry an IndexManifest. */
+  private val FixtureLayout = 2
+
   /** Source-stamped fixture under java.io.tmpdir: an artifact (arrival
     * slices, a stored index) derived from `$sfDir/$table.parquet` and
     * built once per version of that file. The dir is
     * `name(key)`, key = the first 12 hex chars of
-    * MD5(`sfDir|length_mtime`), so regenerated testdata (same path, new
-    * bytes) gets a new dir instead of a stale artifact; a layout change
-    * bumps the name's prefix.
+    * MD5(`sfDir|length_mtime|layout`), so regenerated testdata (same
+    * path, new bytes) gets a new dir instead of a stale artifact; a
+    * layout change bumps the name's prefix, or [[FixtureLayout]] for all.
     *
     * A dir holding the ready marker is returned as is. Otherwise the
     * dir is deleted, `build` writes it (the dir does not exist yet, so
@@ -223,7 +227,7 @@ object Tables {
     // obscure downstream read error
     require(src.exists(), s"fixture source does not exist: $src")
     val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$sfDir|${src.length()}_${src.lastModified()}".getBytes("UTF-8"))
+      .digest(s"$sfDir|${src.length()}_${src.lastModified()}|v$FixtureLayout".getBytes("UTF-8"))
       .map("%02x".format(_)).mkString.take(12)
     val dir = new java.io.File(sys.props("java.io.tmpdir"), name(key))
     val ready = new java.io.File(dir, ReadyMarker)
@@ -257,12 +261,16 @@ object Tables {
     * Safe for immutable-file layouts — parquet indexes only ever ADD
     * files (append = new part files in existing partition dirs), so a
     * linked clone can be appended to without disturbing the source.
+    * Hadoop rewrites its `_SUCCESS` marker (and checksum) in place on
+    * append, so those are copied; any other rewrite must be a rename.
     * Exists for the verify harness's append-lifecycle queries, which
     * must mutate a FRESH copy each run to stay idempotent; production
     * appends to the live index and never clones (the reason this is
     * harness plumbing, not an operator). A file copy of a corpus-sized
     * index would be a driver-side corpus scan; a link walk is metadata
     * only. */
+  private val CommitMarkers = Set("_SUCCESS", "._SUCCESS.crc")
+
   def linkCopyDirectory(src: java.io.File, dst: java.io.File): Unit = {
     import java.nio.file.{Files, Path}
     val sp = src.toPath
@@ -272,7 +280,8 @@ object Tables {
       if (Files.isDirectory(p)) { Files.createDirectories(t): Unit }
       else if (p.getFileName.toString != ReadyMarker) {
         Files.createDirectories(t.getParent)
-        try Files.createLink(t, p)
+        if (CommitMarkers(p.getFileName.toString)) Files.copy(p, t): Unit
+        else try Files.createLink(t, p)
         catch { case _: UnsupportedOperationException | _: java.io.IOException =>
           Files.copy(p, t): Unit }
         ()

@@ -1,9 +1,10 @@
 package graft
 
-import graft.operators.{Dedup, Layout, Similarity}
+import graft.operators.{Dedup, IndexManifest, Layout, Similarity}
 import graft.sources.Tables
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** ONE parametrized conformance battery driving every stored-index
   * family through the same lifecycle script (VERDICT r9 #8 — each
@@ -40,6 +41,8 @@ class IndexLifecycleConformanceSpec extends SparkSpec {
   /** One stored-index family's lifecycle verbs, uniformly shaped. */
   private final case class Family(
       name: String,
+      // the family its IndexManifest records
+      manifest: String,
       build: String => Unit,
       append: String => Unit,
       // (subdir, partition cols) in the append's documented write order
@@ -60,6 +63,7 @@ class IndexLifecycleConformanceSpec extends SparkSpec {
   private def families: Seq[Family] = Seq(
     Family(
       name = "tfidf",
+      manifest = IndexManifest.Tfidf,
       build = p => Similarity.writeTfidfIndex(terms(baseDoc), p),
       append = p => { Similarity.appendToTfidfIndex(p, terms(deltaDoc)): Unit },
       stores = Seq("tf" -> Seq("tb"), "postings" -> Seq("tb"),
@@ -71,6 +75,7 @@ class IndexLifecycleConformanceSpec extends SparkSpec {
       serve = p => Similarity.tfidfCosinePairsStored(spark, p, threshold = 0.3)),
     Family(
       name = "graph-ann",
+      manifest = IndexManifest.KnnGraph,
       // quantizer persisted (r12): appends region-seed their insertion
       // walks, and the maintenance verb below exercises the ENTRY
       // tier's refresh alongside the prune — both value-preserving
@@ -99,6 +104,7 @@ class IndexLifecycleConformanceSpec extends SparkSpec {
         k = 5, nProbe = 4, beamWidth = 16, rounds = 4)),
     Family(
       name = "dedup-lsh",
+      manifest = IndexManifest.DedupLsh,
       build = p => Dedup.writeIncrementalIndex(docs.filter(baseDoc),
         col("text"), col("doc_id"), p),
       append = p => Dedup.appendToIncrementalIndex(p, docs.filter(deltaDoc),
@@ -111,6 +117,7 @@ class IndexLifecycleConformanceSpec extends SparkSpec {
         col("text"), col("doc_id"), threshold = 0.5)),
     Family(
       name = "winnowing",
+      manifest = IndexManifest.Winnow,
       build = p => Dedup.writeWinnowIndex(docs.filter(baseDoc),
         col("text"), col("doc_id"), p),
       append = p => Dedup.appendToWinnowIndex(p, docs.filter(deltaDoc),
@@ -176,6 +183,73 @@ class IndexLifecycleConformanceSpec extends SparkSpec {
       spark.catalog.clearCache()
       Seq(pristine, ref, torn).foreach(Tables.deleteRecursive)
     }
+
+  for (fam <- families)
+    test(s"[${fam.name}] torn manifest: a leftover temp is ignored, a lost one fails serve by name, a wrong family is refused") {
+      val idx = Tables.scratchDir(s"conf_${fam.name}_manifest")
+      fam.build(idx)
+      val manifest = IndexManifest.file(idx)
+      val served = rowsOf(fam.serve(idx))
+      // a crash before the rename leaves a half-written temp beside the
+      // committed manifest
+      java.nio.file.Files.write(
+        manifest.resolveSibling(s"${manifest.getFileName}.${java.util.UUID.randomUUID()}.tmp"),
+        Array[Byte](0x7b, 0x22, 0x66, 0, -1))
+      assertResult(served, s"${fam.name}: a leftover temp manifest must not change serving")(
+        rowsOf(fam.serve(idx)))
+      val other = if (fam.manifest == IndexManifest.Winnow) IndexManifest.Tfidf
+        else IndexManifest.Winnow
+      val wrong = intercept[IllegalArgumentException](IndexManifest.read(idx, other))
+      assert(Seq(manifest.toString, fam.manifest, other).forall(wrong.getMessage.contains),
+        wrong.getMessage)
+      java.nio.file.Files.delete(manifest)
+      val lost = intercept[IllegalArgumentException](rowsOf(fam.serve(idx)))
+      assert(lost.getMessage.contains(manifest.toString), lost.getMessage)
+      spark.catalog.clearCache()
+      Tables.deleteRecursive(idx)
+    }
+
+  test("maintenance on a hardlinked copy leaves every file of the pristine index alone, manifest included") {
+    import java.nio.file.Files
+    def manifest(idx: String): (String, AnyRef) = {
+      val f = IndexManifest.file(idx)
+      (new String(Files.readAllBytes(f), "UTF-8"), Files.getAttribute(f, "unix:ino"))
+    }
+    // every file with its mtime: catches a writer that rewrites any
+    // linked file in place (Hadoop's _SUCCESS marker is one)
+    def files(idx: String): Map[String, Long] = {
+      val w = Files.walk(java.nio.file.Paths.get(idx))
+      try w.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(f => f.toString -> Files.getLastModifiedTime(f).toMillis).toMap
+      finally w.close()
+    }
+    val tfidf = families.find(_.name == "tfidf").get
+    val graph = families.find(_.name == "graph-ann").get
+    // tf-idf: append then refresh rewrites stat_n; graph: append then a
+    // tripped prune rewrites base_nodes
+    val rewrites: Seq[(Family, String => Unit)] = Seq(
+      tfidf -> { p => tfidf.append(p); Similarity.refreshTfidfIndex(spark, p) },
+      graph -> { p =>
+        graph.append(p)
+        assert(Similarity.pruneKnnGraphIndexIfStale(spark, p, degreeCap = 8),
+          "a 33% append must trip the 10% prune budget")
+      })
+    for ((fam, rewrite) <- rewrites) {
+      val pristine = Tables.scratchDir(s"conf_${fam.name}_link_pristine")
+      fam.build(pristine)
+      val (before, beforeFiles) = (manifest(pristine), files(pristine))
+      val copy = Tables.scratchCopy(s"conf_${fam.name}_link_copy", pristine)
+      assert(manifest(copy)._2 == before._2, "premise: the copy's manifest is a hardlink")
+      Thread.sleep(20) // an in-place rewrite must show as a later mtime
+      rewrite(copy)
+      assert(manifest(copy)._1 != before._1, s"${fam.name}: the copy's manifest must change")
+      assert(manifest(pristine) == before,
+        s"${fam.name}: rewriting the copy's manifest must not touch the pristine one")
+      assertResult(beforeFiles, s"${fam.name}: the pristine index's files")(files(pristine))
+      spark.catalog.clearCache()
+      Seq(pristine, copy).foreach(Tables.deleteRecursive)
+    }
+  }
 
   test("[graph-ann] entry tier: own clock, budgeted refresh re-samples appended vectors, prune leaves it alone") {
     val base = emb.filter(baseVec)

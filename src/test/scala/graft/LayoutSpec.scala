@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Changelog, Layout}
+import graft.operators.{Changelog, IndexManifest, Layout}
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
 
@@ -152,5 +152,29 @@ class LayoutSpec extends SparkSpec {
       .map(r => (r.getLong(1), Option(r.get(2)).map(_.asInstanceOf[Long]), r.getBoolean(6)))
     assert(hist.toSeq == Seq(
       (10L, Some(20L), false), (20L, Some(30L), false), (30L, None, false)))
+  }
+
+  test("index manifest: round trip, refused formats and schemes name the file, invisible to dataBytes") {
+    import java.nio.file.Files
+    val idx = Tables.scratchDir("spec_manifest")
+    IndexManifest.write(idx, IndexManifest.IvfPq, Map("m" -> 8L, "big" -> (1L << 40)))
+    val m = IndexManifest.read(s"file:$idx", IndexManifest.IvfPq)
+    assert(m.int("m") == 8 && m.long("big") == (1L << 40) && m.fields.size == 2)
+    assert(intercept[IllegalStateException](m.long("absent")).getMessage.contains("absent"))
+    assert(intercept[ArithmeticException](m.int("big")) != null)
+    val f = IndexManifest.file(idx)
+    assert(new java.io.File(idx).list().toSeq == Seq(f.getFileName.toString),
+      "the commit leaves no temp file behind")
+    assert(Layout.dataBytes(idx) == 0L)
+    Files.write(f, "{\"format\":2,\"family\":\"ivfpq\",\"fields\":{}}".getBytes("UTF-8"))
+    val format = intercept[IllegalArgumentException](IndexManifest.read(idx, IndexManifest.IvfPq))
+    assert(format.getMessage.contains(f.toString) && format.getMessage.contains("format"))
+    Files.write(f, Array[Byte](1, 2, 3))
+    val garbled = intercept[IllegalArgumentException](IndexManifest.read(idx, IndexManifest.IvfPq))
+    assert(garbled.getMessage.contains(f.toString))
+    val remote = intercept[UnsupportedOperationException](
+      IndexManifest.read("s3://bucket/idx", IndexManifest.IvfPq))
+    assert(remote.getMessage.contains("s3://bucket/idx"))
+    Tables.deleteRecursive(idx)
   }
 }
