@@ -854,14 +854,14 @@ object CorpusOps {
     *  - a self-pair pick (a,a) closes the batch: its own fusion mints
     *    pairs like (aa, a) bounded only by its own count.
     *
-    * Each round's state goes through [[Iterate.ckpt]] (the fixed-point
+    * Each round's state goes through [[Iterate.Rounds]] (the fixed-point
     * operators' Tungsten-level materialize-and-truncate): lineage stays
     * O(1) across rounds — a plain persist leaves every prior round's
     * cached plan NESTED in the logical tree, and per-round plan
     * processing grows superlinearly with learned merges (measured: a
     * 24-merge train spent minutes in plan-string generation alone).
-    * The superseded round's blocks are freed explicitly. The realized
-    * batch factor at ≥ 1 k merges is in docs/EXPERIMENTS.md. */
+    * The superseded round's blocks are freed as each round lands. The
+    * realized batch factor at ≥ 1 k merges is in docs/EXPERIMENTS.md. */
   def bpeTrain(docs: DataFrame, text: Column, nMerges: Int,
       batch: Int = 16): DataFrame =
     bpeTrainWithRounds(docs, text, nMerges, batch)._1
@@ -875,10 +875,12 @@ object CorpusOps {
     val spark = docs.sparkSession
     val SEP = "\u0001" // any char absent from the token alphabet
     val SS = SEP + SEP // the boundary: always exactly two separators
-    var (words, wordsRdd, _) = Iterate.ckpt(docs
+    val (words0, words0Rdd, _) = Iterate.ckpt(docs
       .select(graft.functions.ShingleGenerator.shingles(text, 1).as("t"))
       .groupBy("t").agg(count(lit(1)).as("c"))
       .select(concat(lit(SS), regexp_replace(col("t"), "(.)", "$1" + SS)).as("w"), col("c")))
+    val state = new Iterate.Rounds(words0, words0Rdd)
+    var words = state.input
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     var exhausted = false
     var rounds = 0
@@ -931,17 +933,14 @@ object CorpusOps {
         // true argmax p1)
         val safe = picks.head +: picks.tail.takeWhile(_._3 > stopN)
         safe.foreach { case (l, r, n) => merges += ((merges.size + 1, l, r, n)) }
-        val (next, nextRdd, _) = Iterate.ckpt(words
+        words = state.step(words
           .withColumn("w", safe.foldLeft(col("w")) { case (acc, (l, r, _)) =>
             call_function("replace",
               acc, lit(SEP + l + SS + r + SEP), lit(SEP + l + r + SEP))
           }))
-        wordsRdd.unpersist(blocking = false): Unit
-        words = next; wordsRdd = nextRdd
       }
     }
-    wordsRdd.unpersist(blocking = false): Unit
-    (spark.createDataFrame(merges.toSeq).toDF("step", "lhs", "rhs", "n"), rounds)
+    (state.free(spark.createDataFrame(merges.toSeq).toDF("step", "lhs", "rhs", "n")), rounds)
   }
 
   /** Persist a [[bpeTrain]] merge table as a SERVING artifact — the

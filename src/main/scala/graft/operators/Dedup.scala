@@ -881,9 +881,7 @@ object Dedup {
     // pageRank, where the edge checkpoint is reused by key every
     // round — docs/EXPERIMENTS.md r13).
     while (!converged && rounds < maxIters) {
-      val roundBody = smallStar(largeStar(e))
-      val (next, nextRdd, nextCount) = ckpt(roundBody)
-      if (rounds == 1) Iterate.dumpRoundPlan(roundBody, "cc_round")
+      val (next, nextRdd, nextCount) = ckpt(smallStar(largeStar(e)))
       // both sides are distinct sets: equal count + empty one-sided
       // difference ⇒ set equality ⇒ fixpoint (forest of min-stars)
       converged = nextCount == eCount && next.except(e).limit(1).count() == 0

@@ -1,7 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
+import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
+import scala.reflect.runtime.universe.TypeTag
 
 /** Iterative graph analytics over edge lists — PageRank as the power-
   * iteration companion to Dedup.connectedComponents (the other
@@ -26,9 +30,42 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  private def allLong(df: DataFrame, cols: String*): Boolean =
-    cols.forall(c =>
-      df.schema(c).dataType == org.apache.spark.sql.types.LongType)
+  /** The tier skeleton of the fixed-point operators (optimization r12,
+    * guide §1.2; the budget is [[Tier.GraphEdges]]). Checkpoints
+    * `input` once. Below the budget, when every input column is BIGINT,
+    * it collects the rows, frees the checkpoint, runs the scalar
+    * `local` kernel and returns its rows as a frame with columns `out`:
+    * every operator here is integral and order-free by the determinism
+    * contract, so the scalar replay is bit-identical (GraphSpec pins
+    * local ≡ distributed) and the per-round exchanges vanish. Past the
+    * budget the checkpoint becomes the input of the `distributed`
+    * rounds' [[Iterate.Rounds]] — the 100 TB shape. */
+  private def tiered[I <: Product : TypeTag, O <: Product : TypeTag : ClassTag](
+      op: String, input: DataFrame, out: String*)(local: Array[I] => Seq[O])(
+      distributed: Iterate.Rounds => DataFrame): DataFrame = {
+    val spark = input.sparkSession
+    val (in, inRdd, n) = Iterate.ckpt(input)
+    if (in.schema.forall(_.dataType == LongType) &&
+        Tier.local(spark, op, Tier.GraphEdges, n)) {
+      import spark.implicits._
+      val rows = in.as[I].collect()
+      inRdd.unpersist(blocking = false): Unit
+      val res = local(rows)
+      spark.sparkContext.parallelize(res, math.max(1, res.length / 500000)).toDF(out: _*)
+    } else distributed(new Iterate.Rounds(in, inRdd))
+  }
+
+  /** Place + order the rounds' edge list by src ONCE (r13): under
+    * pinnedRounds the checkpoint's hash(src) partitioning and [src ASC]
+    * ordering satisfy every round's join requirement, so no round
+    * exchanges or re-sorts the (big) edge list — only the per-round
+    * state moves (guide §2.4). Unpinned operators place it too. */
+  private def placedBySrc(r: Iterate.Rounds): DataFrame =
+    r.place(r.input.repartition(col("src")).sortWithinPartitions("src"))
+
+  /** The distinct seed ids, collected for a scalar kernel. */
+  private def seedIds(seeds: DataFrame): Array[Long] =
+    seeds.select(col("node")).distinct().as(Encoders.scalaLong).collect()
 
   /** `iters` rounds of damped PageRank over directed `edges(src, dst)`.
     * rank₀ = scale; rankᵢ₊₁(v) = (scale−damping) + damping·Σ_{u→v}
@@ -62,32 +99,16 @@ object Graph {
     val spark = edges.sparkSession
     val base = scale - damping
 
-    def ckpt(df: DataFrame): (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]) = {
-      val (out, rdd, _) = Iterate.ckpt(df)
-      (out, rdd)
-    }
-
     // `edgesDistinct = true` lets callers that already deduplicated (or
     // construct provably duplicate-free edges, e.g. a symmetrized
     // distinct bipartite list) skip a full edge-list shuffle here
     val e0 = edges.select(col("src"), col("dst"))
     val e = if (edgesDistinct) e0 else e0.distinct()
     val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    // (src, dst, outdeg) materialized once, reused by every round
-    val (edC, edRdd, nEdges) = Iterate.ckpt(e.join(deg, "src"))
-    // LOCAL ITERATION TIER (optimization r12, guide §1.2): below the
-    // driver edge budget, run the power iteration over the collected
-    // edge list — every operation here is integral and order-free by
-    // the determinism contract, so the scalar replay is bit-identical
-    // (GraphSpec pins local ≡ distributed), and the per-round
-    // join + aggregate + join exchanges vanish. Past the budget the
-    // Pregel-style rounds below are unchanged — the 100 TB shape.
     val op = if (sources.isEmpty) "pageRank" else "personalizedPageRank"
-    if (allLong(edC, "src", "dst") && Tier.local(spark, op, Tier.GraphEdges, nEdges)) {
+    // (src, dst, outdeg) materialized once, reused by every round
+    tiered(op, e.join(deg, "src"), "node", "rank") { (rows: Array[(Long, Long, Long)]) =>
       import spark.implicits._
-      val rows = edC.select(col("src"), col("dst"), col("outdeg"))
-        .as[(Long, Long, Long)].collect()
-      edRdd.unpersist(blocking = false): Unit
       val seedSet: Set[Long] = sources match {
         case None => null
         case Some(s) => s.select(col("node")).as[Long].collect().toSet
@@ -114,32 +135,22 @@ object Graph {
             base * f + damping * (s / scale) + (damping * (s % scale)) / scale): Unit
         }
       }
-      val out = {
-        val buf = new scala.collection.mutable.ArrayBuffer[(Long, Long)](ranks.size())
-        ranks.forEach((n, r) => buf += ((n, r)))
-        buf.toSeq
-      }
-      return spark.sparkContext.parallelize(out,
-          math.max(1, out.length / 500000)).toDF("node", "rank")
-    }
+      ranks.asScala.toSeq
+    } { r =>
     // DISTRIBUTED branch runs under the pinned round width (r13, guide
     // §2.4 — see Iterate.pinnedRounds): every round's exchange lands at
-    // one width, so the placed edge checkpoint below keeps satisfying
-    // the per-round join requirement. The below-budget path above runs
-    // unpinned (AQE coalescing wins for the one-shot edge build).
+    // one width, so the placed edge checkpoint keeps satisfying the
+    // per-round join requirement. The below-budget path runs unpinned
+    // (AQE coalescing wins for the one-shot edge build).
     Iterate.pinnedRounds(spark) {
-    // place + order the edge list by src ONCE: with the pin and the
-    // AQE-unwrapping checkpoint, no round exchanges or re-sorts it
-    val (edP, edPRdd, _) = Iterate.ckpt(
-      edC.repartition(col("src")).sortWithinPartitions("src"))
-    edRdd.unpersist(blocking = false): Unit
+    val edP = placedBySrc(r)
     // nodes materialized once too — left lazy it would re-run a full
     // edge-list distinct inside EVERY round's plan (6× the edge scan)
     // (personalized: the 0/1 seed flag rides along in the same
     // checkpoint, so the per-round teleport term is a column read,
     // never a re-join)
     val nodesBare = edP.select(col("src").as("node")).distinct()
-    val (nodes, nodesRdd) = ckpt(sources match {
+    val nodes = r.hold(sources match {
       case None => nodesBare.withColumn("__isrc", lit(1L))
       case Some(s) => nodesBare
         .join(broadcast(s.select(col("node"), lit(1L).as("__isrc"))), Seq("node"), "left")
@@ -147,8 +158,7 @@ object Graph {
     })
 
     var ranks = nodes.select(col("node"), (col("__isrc") * scale).as("rank"))
-    var prevRdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] = null
-    for (round <- 1 to iters) {
+    for (_ <- 1 to iters) {
       // `broadcastRanks`: when the node set is dimension-scale (fits an
       // executor), shipping the rank table to the edge partitions keeps
       // the big edge list entirely UNSHUFFLED every round — the only
@@ -170,28 +180,18 @@ object Graph {
       // accumulates ~1.1e13 micro-units (a 10^7-in-degree hub at full
       // rank, i.e. exactly the Zipf-hub regime at billion-node scale);
       // each decomposed term stays under 2^63 up to ~10^13 nodes
-      val next = nodes.join(
+      ranks = r.step(nodes.join(
           if (broadcastRanks) broadcast(contribs) else contribs, Seq("node"), "left")
         .select(col("node"),
           expr(s"CAST($base * __isrc + $damping * (coalesce(s, 0) div $scale) " +
-            s"+ ($damping * (coalesce(s, 0) % $scale)) div $scale AS BIGINT)").as("rank"))
-      val (nextDf, rdd) = ckpt(next)
-      // steady-state round plan for the plans/ evidence (round ≥ 2:
-      // round 1's rank side comes straight off the nodes checkpoint)
-      if (round == 2) Iterate.dumpRoundPlan(next, "pagerank_round")
-      if (prevRdd != null) prevRdd.unpersist(blocking = false): Unit
-      ranks = nextDf
-      prevRdd = rdd
+            s"+ ($damping * (coalesce(s, 0) % $scale)) div $scale AS BIGINT)").as("rank")))
     }
-    // the returned ranks frame reads its OWN checkpoint blocks only —
-    // free the edge-list/nodes copies now rather than leaking them for
-    // the session lifetime (the round-2 block-manager-leak class)
-    if (iters > 0) {
-      edPRdd.unpersist(blocking = false): Unit
-      nodesRdd.unpersist(blocking = false): Unit
-    }
-    ranks
+    // the ranks read their own checkpoint (after no round, the nodes
+    // one): the edge copy goes now rather than leaking for the session
+    // lifetime (the round-2 block-manager-leak class)
+    r.free(ranks)
     } // pinnedRounds
+    }
   }
 
   /** Exact triangle count over undirected `edges(u, v)` (distinct,
@@ -210,7 +210,13 @@ object Graph {
     * steps are equi-joins (degree join, wedge self-join on the low
     * node, closing-edge LEFT SEMI); nothing is broadcast-sized by
     * assumption, nothing is quadratic in nodes. */
-  def triangleCount(edges: DataFrame): DataFrame = {
+  def triangleCount(edges: DataFrame): DataFrame =
+    orientedTriangles(edges)._1.agg(count(lit(1)).as("triangles"))
+
+  /** [[triangleCount]]'s triangles, one row each: (b1, b2, a, …) with
+    * `a` the minimum corner under (degree, id) — plus the degree table
+    * (n, d) the orientation ranked by. */
+  private def orientedTriangles(edges: DataFrame): (DataFrame, DataFrame) = {
     val e = edges.select(col("u"), col("v"))
     val deg = e.select(col("u").as("n")).union(e.select(col("v").as("n")))
       .groupBy("n").agg(count(lit(1)).as("d"))
@@ -227,13 +233,12 @@ object Graph {
       when(uLow, col("dv")).otherwise(col("du")).as("db"))
     val e1 = oriented.select(col("a"), col("b").as("b1"), col("db").as("db1"))
     val e2 = oriented.select(col("a"), col("b").as("b2"), col("db").as("db2"))
-    val wedges = e1.join(e2, "a")
+    val tri = e1.join(e2, "a")
       .where(col("db1") < col("db2") ||
         (col("db1") === col("db2") && col("b1") < col("b2")))
-    wedges
       .join(oriented.select(col("a").as("b1"), col("b").as("b2")),
         Seq("b1", "b2"), "left_semi")
-      .agg(count(lit(1)).as("triangles"))
+    (tri, deg)
   }
 
   /** Per-node local clustering coefficient: lcc(n) = 2·t(n) /
@@ -248,25 +253,7 @@ object Graph {
     * and report NULL. Input contract: distinct undirected edges as
     * (u, v) pairs. */
   def localClustering(edges: DataFrame): DataFrame = {
-    val e = edges.select(col("u"), col("v"))
-    val deg = e.select(col("u").as("n")).union(e.select(col("v").as("n")))
-      .groupBy("n").agg(count(lit(1)).as("d"))
-    val withDeg = e
-      .join(deg.select(col("n").as("u"), col("d").as("du")), "u")
-      .join(deg.select(col("n").as("v"), col("d").as("dv")), "v")
-    val uLow = col("du") < col("dv") ||
-      (col("du") === col("dv") && col("u") < col("v"))
-    val oriented = withDeg.select(
-      when(uLow, col("u")).otherwise(col("v")).as("a"),
-      when(uLow, col("v")).otherwise(col("u")).as("b"),
-      when(uLow, col("dv")).otherwise(col("du")).as("db"))
-    val e1 = oriented.select(col("a"), col("b").as("b1"), col("db").as("db1"))
-    val e2 = oriented.select(col("a"), col("b").as("b2"), col("db").as("db2"))
-    val tri = e1.join(e2, "a")
-      .where(col("db1") < col("db2") ||
-        (col("db1") === col("db2") && col("b1") < col("b2")))
-      .join(oriented.select(col("a").as("b1"), col("b").as("b2")),
-        Seq("b1", "b2"), "left_semi")
+    val (tri, deg) = orientedTriangles(edges)
     val corners = tri
       .select(explode(array(col("a"), col("b1"), col("b2"))).as("n"))
       .groupBy("n").agg(count(lit(1)).as("t"))
@@ -276,6 +263,29 @@ object Graph {
         col("t").as("triangles"),
         when(col("d") >= 2,
           expr("t * 2000000 div (d * (d - 1))")).as("lcc_ppm"))
+  }
+
+  /** Scalar BFS over `adj` from the `start` set (hop 0), up to
+    * `maxHops` hops: each reached node's minimum hop count. [[bfs]]
+    * starts from every seed at once, [[multiSourceHops]] from one seed
+    * at a time. */
+  private def hops(adj: Map[Long, Array[Long]], start: Array[Long],
+      maxHops: Int): java.util.HashMap[Long, Int] = {
+    val d = new java.util.HashMap[Long, Int]()
+    start.foreach(n => d.put(n, 0): Unit)
+    var frontier = start
+    var hop = 0
+    while (hop < maxHops && frontier.nonEmpty) {
+      hop += 1
+      val next = scala.collection.mutable.ArrayBuffer.empty[Long]
+      frontier.foreach { u =>
+        adj.getOrElse(u, Array.empty[Long]).foreach { v =>
+          if (!d.containsKey(v)) { d.put(v, hop); next += v }
+        }
+      }
+      frontier = next.toArray
+    }
+    d
   }
 
   /** Multi-source BFS: minimum hop distance from any seed, up to
@@ -288,56 +298,24 @@ object Graph {
     *
     * Scale shape: edges checkpointed once; the distance vector (≤ one
     * row per reached node) is the only per-round state, checkpointed
-    * with superseded blocks freed (Iterate.ckpt). */
+    * with superseded blocks freed (Iterate.Rounds). */
   def bfs(edges: DataFrame, seeds: DataFrame, maxHops: Int,
-      broadcastFrontier: Boolean = false): DataFrame = {
+      broadcastFrontier: Boolean = false): DataFrame =
+    // local tier: hop distances are integers under an order-free min —
+    // the scalar BFS is bit-identical
+    tiered("bfs", edges.select(col("src"), col("dst")), "node", "dist") {
+      (rows: Array[(Long, Long)]) =>
+        val adj = rows.groupBy(_._1).map { case (s, a) => s -> a.map(_._2) }
+        hops(adj, seedIds(seeds), maxHops).asScala.toSeq
+    } { r =>
     // UNPINNED, deliberately (A/B'd at 10 M edges, docs/EXPERIMENTS.md
     // r13): the frontier collapses after the first hops, so most
     // rounds are tiny and AQE's coalescing + runtime broadcast-join
     // conversion win (pin measured ~2× slower task CPU, twice);
     // contrast sssp/LPA, whose frontiers stay full and where the pin
-    // wins ~2×. The src placement below still applies in both modes.
-    val (eC, eRdd, nE) = Iterate.ckpt(edges.select(col("src"), col("dst")))
-    val spark0 = edges.sparkSession
-    // local tier (see [[Tier.GraphEdges]]): hop distances are integers
-    // under an order-free min — the scalar BFS is bit-identical
-    if (allLong(eC, "src", "dst") && Tier.local(spark0, "bfs", Tier.GraphEdges, nE)) {
-      import spark0.implicits._
-      val adj = eC.select(col("src"), col("dst")).as[(Long, Long)].collect()
-        .groupBy(_._1).map { case (s, a) => s -> a.map(_._2) }
-      eRdd.unpersist(blocking = false): Unit
-      val d = new java.util.HashMap[Long, Int]()
-      var frontier = seeds.select(col("node")).distinct().as[Long].collect()
-      frontier.foreach(n => d.put(n, 0): Unit)
-      var hop = 0
-      while (hop < maxHops && frontier.nonEmpty) {
-        hop += 1
-        val next = scala.collection.mutable.ArrayBuffer.empty[Long]
-        frontier.foreach { u =>
-          adj.getOrElse(u, Array.empty[Long]).foreach { v =>
-            if (!d.containsKey(v)) { d.put(v, hop); next += v }
-          }
-        }
-        frontier = next.toArray
-      }
-      val out = {
-        val buf = new scala.collection.mutable.ArrayBuffer[(Long, Int)](d.size())
-        d.forEach((n, dd) => buf += ((n, dd)))
-        buf.toSeq
-      }
-      return spark0.sparkContext.parallelize(out,
-        math.max(1, out.length / 500000)).toDF("node", "dist")
-    }
-    // place + order the edge list by src ONCE (r13): under pinnedRounds
-    // the checkpoint's hash(src) partitioning and [src ASC] ordering
-    // satisfy every round's frontier-join requirement, so no round
-    // exchanges or re-sorts the (big) edge list — only the frontier and
-    // the merge aggregate move (guide §2.4)
-    val (eP, ePRdd, _) = Iterate.ckpt(
-      eC.repartition(col("src")).sortWithinPartitions("src"))
-    eRdd.unpersist(blocking = false): Unit
-    var (dist, distRdd, _) =
-      Iterate.ckpt(seeds.select(col("node")).distinct().withColumn("dist", lit(0)))
+    // wins ~2×. The src placement still applies in both modes.
+    val eP = placedBySrc(r)
+    var dist = r.step(seeds.select(col("node")).distinct().withColumn("dist", lit(0)))
     for (i <- 1 to maxHops) {
       // broadcastFrontier: same trade as pageRank's broadcastRanks — a
       // dimension-scale frontier ships to the edge partitions so the
@@ -346,16 +324,10 @@ object Graph {
       val cand = (if (broadcastFrontier) broadcast(frontier) else frontier)
         .join(eP, col("node") === col("src"))
         .select(col("dst").as("node"), lit(i).as("dist"))
-      val merged = dist.union(cand).groupBy("node").agg(min("dist").as("dist"))
-      val (m, mRdd, _) = Iterate.ckpt(merged)
-      distRdd.unpersist(blocking = false): Unit
-      dist = m
-      distRdd = mRdd
+      dist = r.step(dist.union(cand).groupBy("node").agg(min("dist").as("dist")))
     }
-    // final dist reads only its own checkpoint — free the edge copy
-    ePRdd.unpersist(blocking = false): Unit
-    dist
-  }
+    r.free(dist)
+    }
 
   /** Per-seed hop distances — [[bfs]] keyed by (seed, node) instead of
     * collapsing to the min over all seeds: seed s's BFS tree stays
@@ -365,61 +337,29 @@ object Graph {
     * the per-round shape is [[bfs]]'s exactly (frontier-restricted
     * expansion, order-free min merge, checkpoint per round). */
   def multiSourceHops(edges: DataFrame, seeds: DataFrame,
-      maxHops: Int): DataFrame = {
+      maxHops: Int): DataFrame =
+    // local tier: per-seed BFS, bit-identical to the keyed min-merge
+    // rounds for the same reason [[bfs]]'s is
+    tiered("multiSourceHops", edges.select(col("src"), col("dst")),
+        "seed", "node", "dist") { (rows: Array[(Long, Long)]) =>
+      val adj = rows.groupBy(_._1).map { case (s, a) => s -> a.map(_._2) }
+      seedIds(seeds).toSeq.flatMap { s =>
+        hops(adj, Array(s), maxHops).asScala.map { case (n, d) => (s, n, d) }
+      }
+    } { r =>
     // unpinned like [[bfs]] — per-seed frontiers collapse the same way
-    val (eC, eRdd, nE) = Iterate.ckpt(edges.select(col("src"), col("dst")))
-    val spark0 = edges.sparkSession
-    // local tier (see [[Tier.GraphEdges]]): per-seed BFS, bit-identical
-    // to the keyed min-merge rounds for the same reason [[bfs]]'s is
-    if (allLong(eC, "src", "dst") &&
-        Tier.local(spark0, "multiSourceHops", Tier.GraphEdges, nE)) {
-      import spark0.implicits._
-      val adj = eC.select(col("src"), col("dst")).as[(Long, Long)].collect()
-        .groupBy(_._1).map { case (s, a) => s -> a.map(_._2) }
-      eRdd.unpersist(blocking = false): Unit
-      val seedArr = seeds.select(col("node")).distinct().as[Long].collect()
-      val out = seedArr.iterator.flatMap { s =>
-        val d = new java.util.HashMap[Long, Int]()
-        d.put(s, 0)
-        var frontier = Array(s)
-        var hop = 0
-        while (hop < maxHops && frontier.nonEmpty) {
-          hop += 1
-          val next = scala.collection.mutable.ArrayBuffer.empty[Long]
-          frontier.foreach { u =>
-            adj.getOrElse(u, Array.empty[Long]).foreach { v =>
-              if (!d.containsKey(v)) { d.put(v, hop); next += v }
-            }
-          }
-          frontier = next.toArray
-        }
-        val buf = new scala.collection.mutable.ArrayBuffer[(Long, Long, Int)](d.size())
-        d.forEach((n, dd) => buf += ((s, n, dd)))
-        buf
-      }.toSeq
-      return spark0.sparkContext.parallelize(out,
-        math.max(1, out.length / 500000)).toDF("seed", "node", "dist")
-    }
-    // one-time src placement — see [[bfs]] (r13)
-    val (eP, ePRdd, _) = Iterate.ckpt(
-      eC.repartition(col("src")).sortWithinPartitions("src"))
-    eRdd.unpersist(blocking = false): Unit
-    var (dist, distRdd, _) = Iterate.ckpt(seeds.select(col("node")).distinct()
+    val eP = placedBySrc(r)
+    var dist = r.step(seeds.select(col("node")).distinct()
       .select(col("node").as("seed"), col("node"), lit(0).as("dist")))
     for (i <- 1 to maxHops) {
       val frontier = dist.where(col("dist") === i - 1)
       val cand = frontier.join(eP, col("node") === col("src"))
         .select(col("seed"), col("dst").as("node"), lit(i).as("dist"))
-      val merged = dist.union(cand)
-        .groupBy("seed", "node").agg(min("dist").as("dist"))
-      val (m, mRdd, _) = Iterate.ckpt(merged)
-      distRdd.unpersist(blocking = false): Unit
-      dist = m
-      distRdd = mRdd
+      dist = r.step(dist.union(cand)
+        .groupBy("seed", "node").agg(min("dist").as("dist")))
     }
-    ePRdd.unpersist(blocking = false): Unit
-    dist
-  }
+    r.free(dist)
+    }
 
   /** Harmonic centrality (Boldi & Vigna, "Axioms for centrality",
     * 2014) for a bounded seed sample: H(s) = Σ_{v≠s} 1/d(s,v), the
@@ -456,21 +396,16 @@ object Graph {
     * distance vector (≤ one row per reached node) + the improved-set
     * frontier, both checkpointed with superseded blocks freed. Early
     * exit when a round improves nothing. */
-  def sssp(edges: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = {
-    val (eC, eRdd, nE) = Iterate.ckpt(edges.select(col("src"), col("dst"), col("w")))
-    val spark0 = edges.sparkSession
-    // local tier (see [[Tier.GraphEdges]]): exact BIGINT distances
-    // under an order-free min — the scalar frontier relaxation is
-    // bit-identical to the keyed min-merge rounds, including the
-    // improved-flag semantics (a tie keeps the settled distance)
-    if (allLong(eC, "src", "dst", "w") && Tier.local(spark0, "sssp", Tier.GraphEdges, nE)) {
-      import spark0.implicits._
-      val adj = eC.select(col("src"), col("dst"), col("w"))
-        .as[(Long, Long, Long)].collect()
-        .groupBy(_._1).map { case (s, a) => s -> a.map(e => (e._2, e._3)) }
-      eRdd.unpersist(blocking = false): Unit
+  def sssp(edges: DataFrame, seeds: DataFrame, rounds: Int): DataFrame =
+    // local tier: exact BIGINT distances under an order-free min — the
+    // scalar frontier relaxation is bit-identical to the keyed
+    // min-merge rounds, including the improved-flag semantics (a tie
+    // keeps the settled distance)
+    tiered("sssp", edges.select(col("src"), col("dst"), col("w")), "node", "dist") {
+      (rows: Array[(Long, Long, Long)]) =>
+      val adj = rows.groupBy(_._1).map { case (s, a) => s -> a.map(e => (e._2, e._3)) }
       val d = new java.util.HashMap[Long, Long]()
-      var frontier: Array[Long] = seeds.select(col("node")).distinct().as[Long].collect()
+      var frontier: Array[Long] = seedIds(seeds)
       frontier.foreach(n => d.put(n, 0L): Unit)
       var i = 0
       while (i < rounds && frontier.nonEmpty) {
@@ -494,14 +429,8 @@ object Graph {
         frontier = improved.toArray
         i += 1
       }
-      val out = {
-        val buf = new scala.collection.mutable.ArrayBuffer[(Long, Long)](d.size())
-        d.forEach((n, dd) => buf += ((n, dd)))
-        buf.toSeq
-      }
-      return spark0.sparkContext.parallelize(out,
-        math.max(1, out.length / 500000)).toDF("node", "dist")
-    }
+      d.asScala.toSeq
+    } { r =>
     // the distance vector carries an `improved` flag from the round
     // that produced it — the next round's frontier at zero extra cost:
     // candidates tag 1, carried distances tag 0, and min(struct(dist,
@@ -515,14 +444,10 @@ object Graph {
     // vs 95.6 s unpinned — the frontier here never settles, so every
     // round re-joins the placed edges and co-partitioning pays;
     // docs/EXPERIMENTS.md r13)
-    Iterate.pinnedRounds(spark0) {
-    // one-time src placement — see [[bfs]] (r13)
-    val (eP, ePRdd, _) = Iterate.ckpt(
-      eC.repartition(col("src")).sortWithinPartitions("src"))
-    eRdd.unpersist(blocking = false): Unit
-    var (cur, curRdd, _) = Iterate.ckpt(
-      seeds.select(col("node")).distinct()
-        .withColumn("dist", lit(0L)).withColumn("improved", lit(true)))
+    Iterate.pinnedRounds(edges.sparkSession) {
+    val eP = placedBySrc(r)
+    var cur = r.step(seeds.select(col("node")).distinct()
+      .withColumn("dist", lit(0L)).withColumn("improved", lit(true)))
     var i = 0
     var done = false
     while (i < rounds && !done) {
@@ -530,22 +455,17 @@ object Graph {
         .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"),
           lit(1).as("tag"))
       val base = cur.select(col("node"), col("dist"), lit(0).as("tag"))
-      val merged = base.union(cand).groupBy("node")
+      cur = r.step(base.union(cand).groupBy("node")
         .agg(min(struct(col("dist"), col("tag"))).as("best"))
         .select(col("node"), col("best.dist").as("dist"),
-          (col("best.tag") === 1).as("improved"))
-      val (m, mRdd, _) = Iterate.ckpt(merged)
-      if (i == 1) Iterate.dumpRoundPlan(merged, "sssp_round")
-      curRdd.unpersist(blocking = false): Unit
-      cur = m; curRdd = mRdd
+          (col("best.tag") === 1).as("improved")))
       // early exit scans the fresh checkpoint — no shuffle
       done = cur.where(col("improved")).isEmpty
       i += 1
     }
-    ePRdd.unpersist(blocking = false): Unit
-    cur.select(col("node"), col("dist"))
+    r.free(cur.select(col("node"), col("dist")))
     } // pinnedRounds
-  }
+    }
 
   /** `iters` rounds of synchronous label propagation (community
     * detection; Raghavan et al. 2007) over symmetrized `edges(src,
@@ -574,17 +494,12 @@ object Graph {
     * superseded checkpoints freed (same dataflow as [[pageRank]]). */
   def labelPropagation(edges: DataFrame, iters: Int): DataFrame = {
     val B = 4294967296L // 2^32: pack (cnt, label) monotonically
-    val (eC, eRdd, nE) = Iterate.ckpt(edges.select(col("src"), col("dst")))
-    val spark0 = edges.sparkSession
-    // local tier (see [[Tier.GraphEdges]]): the synchronous update with
-    // the (count DESC, label ASC) tie order is a pure function of the
-    // graph — the scalar replay uses the SAME monotonic packing, so
-    // labels are bit-identical to the keyed aggregate rounds
-    if (allLong(eC, "src", "dst") &&
-        Tier.local(spark0, "labelPropagation", Tier.GraphEdges, nE)) {
-      import spark0.implicits._
-      val rows = eC.select(col("src"), col("dst")).as[(Long, Long)].collect()
-      eRdd.unpersist(blocking = false): Unit
+    // local tier: the synchronous update with the (count DESC, label
+    // ASC) tie order is a pure function of the graph — the scalar
+    // replay uses the SAME monotonic packing, so labels are
+    // bit-identical to the keyed aggregate rounds
+    tiered("labelPropagation", edges.select(col("src"), col("dst")), "node", "label") {
+      (rows: Array[(Long, Long)]) =>
       var labels = new java.util.HashMap[Long, Long]()
       rows.foreach { case (s, _) => labels.putIfAbsent(s, s): Unit }
       for (_ <- 1 to iters) {
@@ -609,41 +524,27 @@ object Graph {
         packed.forEach((n, p) => next.put(n, B - 1L - (p % B)): Unit)
         labels = next
       }
-      val out = {
-        val buf = new scala.collection.mutable.ArrayBuffer[(Long, Long)](labels.size())
-        labels.forEach((n, l) => buf += ((n, l)))
-        buf.toSeq
-      }
-      return spark0.sparkContext.parallelize(out,
-        math.max(1, out.length / 500000)).toDF("node", "label")
-    }
+      labels.asScala.toSeq
+    } { r =>
     // DISTRIBUTED rounds run PINNED (A/B at 10 M edges: 34.4 s pinned
     // vs 58.9 s unpinned — every node relabels every round, so the
     // placed edge join pays each round; docs/EXPERIMENTS.md r13)
-    Iterate.pinnedRounds(spark0) {
-    // one-time src placement — see [[bfs]] (r13)
-    val (eP, ePRdd, _) = Iterate.ckpt(
-      eC.repartition(col("src")).sortWithinPartitions("src"))
-    eRdd.unpersist(blocking = false): Unit
-    var (labels, labelsRdd, _) = Iterate.ckpt(
-      eP.select(col("src").as("node")).distinct()
-        .select(col("node"), col("node").as("label")))
+    Iterate.pinnedRounds(edges.sparkSession) {
+    val eP = placedBySrc(r)
+    var labels = r.step(eP.select(col("src").as("node")).distinct()
+      .select(col("node"), col("node").as("label")))
     for (_ <- 1 to iters) {
-      val next = labels.join(eP, col("node") === col("src"))
+      labels = r.step(labels.join(eP, col("node") === col("src"))
         .groupBy(col("dst"), col("label"))
         .agg(count(lit(1)).as("cnt"))
         .groupBy(col("dst"))
         .agg(max(col("cnt") * B + (lit(B - 1) - col("label"))).as("packed"))
         .select(col("dst").as("node"),
-          (lit(B - 1) - pmod(col("packed"), lit(B))).as("label"))
-      val (n, nRdd, _) = Iterate.ckpt(next)
-      labelsRdd.unpersist(blocking = false): Unit
-      labels = n
-      labelsRdd = nRdd
+          (lit(B - 1) - pmod(col("packed"), lit(B))).as("label")))
     }
-    ePRdd.unpersist(blocking = false): Unit
-    labels
+    r.free(labels)
     } // pinnedRounds
+    }
   }
 
   /** `iters` rounds of k-core peeling over symmetrized `edges(src,
@@ -660,19 +561,12 @@ object Graph {
     * against the ≤node-sized survivor set, with the shrunken edge list
     * checkpointed and the superseded round freed. No round ever
     * shuffles more than the current subgraph. */
-  def kCore(edges: DataFrame, k: Int, iters: Int): DataFrame = {
-    // unpinned like CC: the rounds re-checkpoint a SHRINKING edge list
-    // and the second semi-join is keyed by dst — no stable
-    // co-partitioning to preserve, so AQE coalescing's fewer/bigger
-    // tasks win (the CC A/B at 10 M edges, docs/EXPERIMENTS.md r13)
-    var (e, eRdd, nE0) = Iterate.ckpt(edges.select(col("src"), col("dst")))
-    val spark0 = edges.sparkSession
-    // local tier (see [[Tier.GraphEdges]]): peeling is a pure set
-    // fixpoint (degree counts and semi-joins), bit-identical locally
-    if (allLong(e, "src", "dst") && Tier.local(spark0, "kCore", Tier.GraphEdges, nE0)) {
-      import spark0.implicits._
-      var rows = e.select(col("src"), col("dst")).as[(Long, Long)].collect()
-      eRdd.unpersist(blocking = false): Unit
+  def kCore(edges: DataFrame, k: Int, iters: Int): DataFrame =
+    // local tier: peeling is a pure set fixpoint (degree counts and
+    // semi-joins), bit-identical locally
+    tiered("kCore", edges.select(col("src"), col("dst")), "node", "core_deg") {
+      (rows0: Array[(Long, Long)]) =>
+      var rows = rows0
       for (_ <- 1 to iters) {
         val deg = new java.util.HashMap[Long, Long]()
         rows.foreach { case (s, _) => deg.merge(s, 1L, (a, b) => a + b): Unit }
@@ -682,28 +576,23 @@ object Graph {
       }
       val core = new java.util.HashMap[Long, Long]()
       rows.foreach { case (s, _) => core.merge(s, 1L, (a, b) => a + b): Unit }
-      val out = {
-        val buf = new scala.collection.mutable.ArrayBuffer[(Long, Long)](core.size())
-        core.forEach((n, d) => buf += ((n, d)))
-        buf.toSeq
-      }
-      return spark0.sparkContext.parallelize(out,
-        math.max(1, out.length / 500000)).toDF("node", "core_deg")
-    }
+      core.asScala.toSeq
+    } { r =>
+    // unpinned like CC: the rounds re-checkpoint a SHRINKING edge list
+    // and the second semi-join is keyed by dst — no stable
+    // co-partitioning to preserve, so AQE coalescing's fewer/bigger
+    // tasks win (the CC A/B at 10 M edges, docs/EXPERIMENTS.md r13)
+    var e = r.input
     for (_ <- 1 to iters) {
       val keep = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select(col("src").as("node"))
-      val pruned = e
+      e = r.step(e
         .join(keep, e("src") === keep("node"), "left_semi")
-        .join(keep, e("dst") === keep("node"), "left_semi")
-      val (p, pRdd, _) = Iterate.ckpt(pruned)
-      eRdd.unpersist(blocking = false): Unit
-      e = p
-      eRdd = pRdd
+        .join(keep, e("dst") === keep("node"), "left_semi"))
     }
-    e.groupBy(col("src")).agg(count(lit(1)).as("core_deg"))
-      .select(col("src").as("node"), col("core_deg"))
-  }
+    r.free(e.groupBy(col("src")).agg(count(lit(1)).as("core_deg"))
+      .select(col("src").as("node"), col("core_deg")))
+    }
 
   /** Newman modularity of a node labeling over symmetrized `edges(src,
     * dst)` — the evaluation metric for [[labelPropagation]]'s
@@ -739,6 +628,39 @@ object Graph {
           .as("modularity"))
   }
 
+  /** The centre-keyed wedges (x, u, v), u < v, of symmetrized
+    * `edges(src, dst)` — Σ deg² rows like any wedge enumeration — plus
+    * the degree table (x, d). */
+  private def centreWedges(edges: DataFrame): (DataFrame, DataFrame) = {
+    val e = edges.select(col("src"), col("dst"))
+    val deg = e.groupBy(col("src").as("x")).agg(count(lit(1)).as("d"))
+    val wedges = e.select(col("src").as("x"), col("dst").as("u"))
+      .join(e.select(col("src").as("x"), col("dst").as("v")), "x")
+      .where(col("u") < col("v"))
+    (wedges, deg)
+  }
+
+  /** Adamic–Adar link prediction (Adamic & Adar, 2003) over
+    * symmetrized edges: AA(u,v) = Σ_{w ∈ N(u)∩N(v)} 1/ln(deg(w)) —
+    * [[commonNeighbors]]' rare-neighbor-weighted refinement (a shared
+    * hub says little; a shared degree-2 node says a lot). Per-wedge
+    * terms are rounded to integer micros BEFORE the sum, so the
+    * aggregate is an exact order-free BIGINT (a float Σ would be
+    * fold-order-dependent); wedge centers have deg ≥ 2, so ln > 0.
+    * Same Σ deg² wedge-enumeration shape as commonNeighbors, with the
+    * degree joined at the CENTER before grouping. */
+  def adamicAdar(edges: DataFrame, minCommon: Int): DataFrame = {
+    val (wedges, deg) = centreWedges(edges)
+    wedges
+      .join(deg, "x")
+      .select(col("u"), col("v"),
+        round(lit(1000000.0) / log(col("d").cast("double")), 0)
+          .cast("long").as("t"))
+      .groupBy("u", "v")
+      .agg(count(lit(1)).as("common"), sum(col("t")).as("aa_micros"))
+      .filter(col("common") >= minCommon)
+  }
+
   /** Common-neighbors link prediction over symmetrized `edges(src,
     * dst)`: for every unordered node pair (u, v) with ≥ `minCommon`
     * shared neighbors, the common-neighbor count and the neighborhood-
@@ -754,41 +676,13 @@ object Graph {
     * a wedge must be counted at its center, not its minimum endpoint).
     * Degrees join in at node cardinality; arithmetic is all integer —
     * ppm by truncating division, bit-stable and oracle-replayable. */
-  /** Adamic–Adar link prediction (Adamic & Adar, 2003) over
-    * symmetrized edges: AA(u,v) = Σ_{w ∈ N(u)∩N(v)} 1/ln(deg(w)) —
-    * [[commonNeighbors]]' rare-neighbor-weighted refinement (a shared
-    * hub says little; a shared degree-2 node says a lot). Per-wedge
-    * terms are rounded to integer micros BEFORE the sum, so the
-    * aggregate is an exact order-free BIGINT (a float Σ would be
-    * fold-order-dependent); wedge centers have deg ≥ 2, so ln > 0.
-    * Same Σ deg² wedge-enumeration shape as commonNeighbors, with the
-    * degree joined at the CENTER before grouping. */
-  def adamicAdar(edges: DataFrame, minCommon: Int): DataFrame = {
-    val e = edges.select(col("src"), col("dst"))
-    val deg = e.groupBy(col("src").as("x")).agg(count(lit(1)).as("d"))
-    e.select(col("src").as("x"), col("dst").as("u"))
-      .join(e.select(col("src").as("x"), col("dst").as("v")), "x")
-      .where(col("u") < col("v"))
-      .join(deg, "x")
-      .select(col("u"), col("v"),
-        round(lit(1000000.0) / log(col("d").cast("double")), 0)
-          .cast("long").as("t"))
-      .groupBy("u", "v")
-      .agg(count(lit(1)).as("common"), sum(col("t")).as("aa_micros"))
-      .filter(col("common") >= minCommon)
-  }
-
   def commonNeighbors(edges: DataFrame, minCommon: Int): DataFrame = {
-    val e = edges.select(col("src"), col("dst"))
-    val deg = e.groupBy(col("src").as("n")).agg(count(lit(1)).as("d"))
-    val wedges = e.select(col("src").as("x"), col("dst").as("u"))
-      .join(e.select(col("src").as("x"), col("dst").as("v")), "x")
-      .where(col("u") < col("v"))
+    val (wedges, deg) = centreWedges(edges)
     val cn = wedges.groupBy(col("u"), col("v"))
       .agg(count(lit(1)).as("common"))
       .filter(col("common") >= minCommon)
-    cn.join(deg.select(col("n").as("u"), col("d").as("du")), "u")
-      .join(deg.select(col("n").as("v"), col("d").as("dv")), "v")
+    cn.join(deg.select(col("x").as("u"), col("d").as("du")), "u")
+      .join(deg.select(col("x").as("v"), col("d").as("dv")), "v")
       .select(col("u"), col("v"), col("common"),
         expr("common * 1000000 div (du + dv - common)").as("jaccard_ppm"))
   }

@@ -41,20 +41,6 @@ object Iterate {
     graft.Graft.withConfs(spark,
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false")(body)
 
-  /** Debug hook (plans/ evidence for the iterative operators, whose
-    * RETURNED frame is a checkpoint leaf that hides the per-round
-    * physical story): when `spark.graft.debug.roundPlanDir` is set,
-    * write `df`'s EXECUTED plan (call after the materializing action,
-    * so AQE is final) to `<dir>/<tag>.txt`. No-op otherwise. */
-  def dumpRoundPlan(df: DataFrame, tag: String): Unit =
-    df.sparkSession.conf.getOption("spark.graft.debug.roundPlanDir").foreach { dir =>
-      new java.io.File(dir).mkdirs()
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(dir, s"$tag.txt"),
-        df.queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))): Unit
-    }
-
   /** Materialize `df` now; return (re-readable frame, freeable RDD
     * handle, materialized row count — convergence checks come free).
     *
@@ -89,5 +75,61 @@ object Iterate {
   def ckptLazy(df: DataFrame): (DataFrame, RDD[InternalRow]) = {
     val rdd = df.queryExecution.toRdd.map(_.copy()).localCheckpoint()
     (Bridge.checkpointedDf(df, rdd), rdd)
+  }
+
+  /** The checkpoints of one fixed-point run (Shim's iterative-MapReduce
+    * shape: place the structure once, then move only the per-round
+    * state). It starts owning `input`, an already-checkpointed frame
+    * (the state [[step]] first replaces, unless [[place]] re-lays it
+    * out), owns every checkpoint it makes, and releases them, so a
+    * round loop never frees a block by hand: peak footprint is the
+    * placed structure plus two state vectors, whatever the round
+    * count. */
+  final class Rounds(val input: DataFrame, inputRdd: RDD[InternalRow]) {
+    private var held = List(inputRdd)
+    private var last: Option[RDD[InternalRow]] = Some(inputRdd)
+
+    private def release(rdd: RDD[InternalRow]): Unit = {
+      rdd.unpersist(blocking = false): Unit
+      held = held.filterNot(_ eq rdd)
+    }
+
+    /** Checkpoint `df`, read by every round, until [[free]]. */
+    def hold(df: DataFrame): DataFrame = {
+      val (out, rdd, _) = ckpt(df)
+      held ::= rdd
+      out
+    }
+
+    /** [[hold]] `placed`, a re-layout of [[input]] made once for every
+      * round, and free [[input]]: from here on the rounds read only the
+      * placed copy. */
+    def place(placed: DataFrame): DataFrame = {
+      val out = hold(placed)
+      release(inputRdd)
+      last = None
+      out
+    }
+
+    /** Checkpoint the next round's state and free the round it
+      * replaces. */
+    def step(next: DataFrame): DataFrame = {
+      val (out, rdd, _) = ckpt(next)
+      last.foreach(release)
+      held ::= rdd
+      last = Some(rdd)
+      out
+    }
+
+    /** Release every checkpoint `result` does not read (its plan's
+      * checkpoint leaves stay resident for the caller); returns
+      * `result`. */
+    def free(result: DataFrame): DataFrame = {
+      val read = result.queryExecution.analyzed.collectLeaves().collect {
+        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+      }.toSet
+      held.filterNot(r => read(r.id)).foreach(release)
+      result
+    }
   }
 }

@@ -94,12 +94,10 @@ object Joins {
     val (lx, t1) = timed(left.select(lk.as("k"), struct(left.columns.map(col).toIndexedSeq: _*).as("row")))
     val (rx, t2) = timed(right.select(rk.as("k"), struct(right.columns.map(col).toIndexedSeq: _*).as("row")))
     // stage 3+4: total-order sort + persist (MergeJoin.java:146-215)
-    val (_, t3) = timed(Tables.writeStage(presort(lx, col("k"), partitions), s"$tmpDir/sorted_left"))
-    val (_, t4) = timed(Tables.writeStage(presort(rx, col("k"), partitions), s"$tmpDir/sorted_right"))
+    val (sl, t3) = timed(Tables.writeStage(presort(lx, col("k"), partitions), s"$tmpDir/sorted_left"))
+    val (sr, t4) = timed(Tables.writeStage(presort(rx, col("k"), partitions), s"$tmpDir/sorted_right"))
     // stage 5: merge of pre-sorted runs (CompositeInputFormat.compose
     // "inner", MergeJoin.java:217-251)
-    val sl = Tables.readStage(spark, s"$tmpDir/sorted_left")
-    val sr = Tables.readStage(spark, s"$tmpDir/sorted_right")
     val (joined, t5) = timed(
       sl.hint("MERGE").join(sr, sl("k") === sr("k"), "inner")
         .select(sl("k").as("k"), sl("row").as("left_row"), sr("row").as("right_row")))
@@ -169,18 +167,18 @@ object Joins {
       .drop("__salt")
   }
 
-  /** Bucketed co-located join — the persistent-table equivalent of the
-    * reference's CompositeInputFormat merge (MergeJoin.java:221-243:
-    * pre-sorted co-partitioned files joined with zero shuffle). Both
-    * tables are written `bucketBy(n, key).sortBy(key)`; Catalyst then
-    * plans a SortMergeJoin with NO Exchange on either side. This is the
-    * 100 TB shape for repeatedly-joined fact tables. */
   /** Process-suffixed table name for harness-created bucketed tables:
     * the default catalog is in-memory but the warehouse directory is
     * shared, so concurrent harness processes must not overwrite each
     * other's table locations mid-read. */
   def processTable(base: String): String = s"${base}_p${ProcessHandle.current().pid()}"
 
+  /** Bucketed co-located join — the persistent-table equivalent of the
+    * reference's CompositeInputFormat merge (MergeJoin.java:221-243:
+    * pre-sorted co-partitioned files joined with zero shuffle). Both
+    * tables are written `bucketBy(n, key).sortBy(key)`; Catalyst then
+    * plans a SortMergeJoin with NO Exchange on either side. This is the
+    * 100 TB shape for repeatedly-joined fact tables. */
   def writeBucketed(df: DataFrame, table: String, key: String, buckets: Int): Unit = {
     val spark = df.sparkSession
     // idempotent ACROSS sessions: the default catalog is in-memory but

@@ -61,10 +61,8 @@ object JoinQueries {
         .select(col("o_custkey"), col("o_orderkey"), col("o_orderstatus"),
           col("o_totalprice").cast("decimal(18,2)").as("o_totalprice_d"), col("o_orderpriority"))
       val c = Tables.table(s, d, "customer")
-      Tables.writeStage(Joins.presort(o, col("o_custkey"), 8), s"$tmp/orders")
-      Tables.writeStage(Joins.presort(c, col("c_custkey"), 8), s"$tmp/customer")
-      val so = Tables.readStage(s, s"$tmp/orders", o.schema)
-      val sc = Tables.readStage(s, s"$tmp/customer", c.schema)
+      val so = Tables.writeStage(Joins.presort(o, col("o_custkey"), 8), s"$tmp/orders")
+      val sc = Tables.writeStage(Joins.presort(c, col("c_custkey"), 8), s"$tmp/customer")
       so.hint("MERGE").join(sc, so("o_custkey") === sc("c_custkey"), "inner")
         .select(
           so("o_custkey").as("key"),

@@ -101,10 +101,12 @@ object SourceQueries {
         |FROM orders WHERE year(o_orderdate) = 1997
         |GROUP BY o_orderpriority""".stripMargin) { (s, d) =>
       val tmp = Tables.scratchDir("graft_part_rt")
-      Tables.table(s, d, "orders")
+      val orders = Tables.table(s, d, "orders")
         .withColumn("o_year", year(col("o_orderdate")))
-        .write.mode("overwrite").partitionBy("o_year").parquet(tmp)
-      s.read.parquet(tmp)
+      orders.write.mode("overwrite").partitionBy("o_year").parquet(tmp)
+      // partition columns come back last: the written schema is the
+      // read-back schema (see join_dpp)
+      Tables.readStage(s, tmp, orders.schema)
         .filter(col("o_year") === 1997)
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("n"),

@@ -117,10 +117,8 @@ object Simulation {
     // --threads ≙ JoinSimulation's datagen thread count: the write
     // parallelism of the generated inputs (part-file count)
     def gen(df: DataFrame): DataFrame = a.threads.fold(df)(df.repartition(_))
-    Tables.writeStage(gen(left), s"$wd/left")
-    Tables.writeStage(gen(right), s"$wd/right")
-    val l = Tables.readStage(spark, s"$wd/left")
-    val r = Tables.readStage(spark, s"$wd/right")
+    val l = Tables.writeStage(gen(left), s"$wd/left")
+    val r = Tables.writeStage(gen(right), s"$wd/right")
     // file_size: MB of the right (t2) input, JoinSimulation.java:130-132
     val fileBytes = {
       def walk(f: java.io.File): Long =
@@ -227,14 +225,12 @@ object Simulation {
         (col("id") +: dimSizes.zipWithIndex.map { case (sz, i) =>
           pmod(xxhash64(col("id") * 31 + i), lit(sz)).as(s"k$i")
         }) :+ DataGen.poolAttr(col("id"), 100).as("attr"): _*)
-    Tables.writeStage(fact0, s"$wd/fact")
+    val fact = Tables.writeStage(fact0, s"$wd/fact")
     val dims = dimSizes.zipWithIndex.map { case (sz, i) =>
       val d0 = spark.range(sz).select(col("id").as(s"dk$i"),
         DataGen.poolAttr(col("id") + i, 100).as(s"dattr$i"))
-      Tables.writeStage(d0, s"$wd/dim$i")
-      (s"dim$i", Tables.readStage(spark, s"$wd/dim$i"))
+      (s"dim$i", Tables.writeStage(d0, s"$wd/dim$i"))
     }
-    val fact = Tables.readStage(spark, s"$wd/fact")
 
     // pin the session's AQE mode to the sweep's --aqe flag BEFORE the
     // advice pass: the advisor's skew branch is AQE-aware (VERDICT r10
@@ -345,16 +341,13 @@ object Simulation {
       else spark.range(rows).select(col("id"),
         pmod(xxhash64(col("id") * 31), lit(sizeA)).as("k0"),
         DataGen.poolAttr(col("id"), 100).as("attr"))
-    Tables.writeStage(fact0, s"$wd/fact")
+    val fact = Tables.writeStage(fact0, s"$wd/fact")
     // A carries the chain's second hop: ak is A's foreign key into B
-    Tables.writeStage(spark.range(sizeA).select(col("id").as("dk0"),
+    val dimA = Tables.writeStage(spark.range(sizeA).select(col("id").as("dk0"),
       pmod(xxhash64(col("id") * 17), lit(sizeB)).as("ak"),
       DataGen.poolAttr(col("id"), 100).as("dattr_a")), s"$wd/dima")
-    Tables.writeStage(spark.range(sizeB).select(col("id").as("dk1"),
+    val dimB = Tables.writeStage(spark.range(sizeB).select(col("id").as("dk1"),
       DataGen.poolAttr(col("id") + 1, 100).as("dattr_b")), s"$wd/dimb")
-    val fact = Tables.readStage(spark, s"$wd/fact")
-    val dimA = Tables.readStage(spark, s"$wd/dima")
-    val dimB = Tables.readStage(spark, s"$wd/dimb")
 
     // order advice next to the timings it predicts (AQE mode pinned
     // first — see multiwayStep)

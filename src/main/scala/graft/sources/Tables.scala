@@ -140,16 +140,16 @@ object Tables {
     * Spark-idiomatic replacement for the reference's SequenceFile
     * intermediates (MergeJoin.java:118-119,204-205). Parquet keeps
     * column pruning + predicate pushdown available to downstream stages,
-    * which SequenceFiles never could. */
-  def writeStage(df: DataFrame, path: String): Unit =
+    * which SequenceFiles never could. Returns the stage read back with
+    * the schema just written ([[readStage]]). */
+  def writeStage(df: DataFrame, path: String): DataFrame = {
     df.write.mode("overwrite").parquet(path)
+    readStage(df.sparkSession, path, df.schema)
+  }
 
-  def readStage(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
-  /** [[readStage]] of a stage just written from a frame of `schema`:
-    * given that schema (nullable, as parquet reads every column back),
-    * the read starts no schema-inference job. */
+  /** A stage written from a frame of `schema`: given that schema
+    * (nullable, as parquet reads every column back), the read starts no
+    * schema-inference job. */
   def readStage(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.schema(StructType(schema.map(_.copy(nullable = true)))).parquet(path)
 

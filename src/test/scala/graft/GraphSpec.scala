@@ -1,6 +1,7 @@
 package graft
 
-import graft.operators.{Graph, Tier}
+import graft.operators.{Dedup, Graph, Tier}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class GraphSpec extends SparkSpec {
@@ -119,22 +120,45 @@ class GraphSpec extends SparkSpec {
     assert(got == Map(1L -> 0, 2L -> 1, 3L -> 2, 4L -> 1, 5L -> 2))
   }
 
-  test("triangle count matches the all-triples truth on random graphs (property)") {
+  /** Random undirected graphs as (density %, canonical u < v edges):
+    * 18 nodes, each possible edge kept i.i.d. at densities 15%..65%;
+    * empty draws are skipped. */
+  private def randomGraphs: Seq[(Int, Seq[(Long, Long)])] = {
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
-    import spark.implicits._
-    // random undirected graphs: 18 nodes, each possible edge kept i.i.d.
     val pairs = (1L to 18L).combinations(2).map { case Seq(a, b) => (a, b) }.toSeq
     val mask = Gen.listOfN(pairs.size, Gen.chooseNum(0, 99))
-    for (i <- 0 until 6) {
+    (0 until 6).map { i =>
       val keep = mask.apply(Gen.Parameters.default, Seed(5000 + i)).get
-      val p = 15 + 10 * i // densities 15%..65%
-      val edges = pairs.zip(keep).collect { case (e, m) if m < p => e }
-      if (edges.nonEmpty) {
-        val got = Graph.triangleCount(edges.toDF("u", "v")).head().getLong(0)
-        val want = naiveTriangles(edges)
-        assert(got == want, s"density $p%: got $got want $want")
-      }
+      val p = 15 + 10 * i
+      (p, pairs.zip(keep).collect { case (e, m) if m < p => e })
+    }.filter(_._2.nonEmpty)
+  }
+
+  test("triangle count matches the all-triples truth on random graphs (property)") {
+    import spark.implicits._
+    for ((p, edges) <- randomGraphs) {
+      val got = Graph.triangleCount(edges.toDF("u", "v")).head().getLong(0)
+      val want = naiveTriangles(edges)
+      assert(got == want, s"density $p%: got $got want $want")
+    }
+  }
+
+  test("local clustering and the link-prediction pair counts agree with their twins on random graphs") {
+    import spark.implicits._
+    // each triangle credits its three corners; Adamic–Adar and common
+    // neighbours group the same centre-keyed wedges by pair
+    def common(df: DataFrame): Map[(Long, Long), Long] =
+      df.select("u", "v", "common").collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    for ((p, edges) <- randomGraphs) {
+      val und = edges.toDF("u", "v")
+      val tri = Graph.triangleCount(und).head().getLong(0)
+      val corners = Graph.localClustering(und).agg(sum("triangles")).head().getLong(0)
+      assert(corners == 3 * tri, s"density $p%: Σ corners $corners, triangles $tri")
+      val sym = edges.flatMap { case (a, b) => Seq((a, b), (b, a)) }.toDF("src", "dst")
+      val cn = common(Graph.commonNeighbors(sym, 1))
+      assert(cn.nonEmpty && cn == common(Graph.adamicAdar(sym, 1)), s"density $p%")
     }
   }
 
@@ -340,6 +364,35 @@ class GraphSpec extends SparkSpec {
             s"(${(local(i) diff dist(i)).take(2)} vs ${(dist(i) diff local(i)).take(2)})")
         assert(local(i).nonEmpty, s"trial $trial: ${names(i)} empty")
       }
+    }
+  }
+
+  test("fixed-point operators leave only the checkpoint their result reads") {
+    import spark.implicits._
+    // each round's superseded state and the placed edge copy are freed:
+    // the local tier leaves nothing resident, the distributed tier at
+    // most the checkpoint its result reads (pageRank after no round
+    // reads the nodes checkpoint, so the placed edges must still go)
+    val es = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 2L), (2L, 1L))
+    val edges = es.toDF("src", "dst")
+    val wEdges = es.map { case (a, b) => (a, b, a + b) }.toDF("src", "dst", "w")
+    val seeds = Seq(1L).toDF("node")
+    val ops: Seq[(String, () => DataFrame)] = Seq(
+      "pageRank" -> (() => Graph.pageRank(edges, 3)),
+      "pageRank, 0 rounds" -> (() => Graph.pageRank(edges, 0)),
+      "personalizedPageRank" -> (() => Graph.personalizedPageRank(edges, seeds, 3)),
+      "bfs" -> (() => Graph.bfs(edges, seeds, 3)),
+      "multiSourceHops" -> (() => Graph.multiSourceHops(edges, seeds, 3)),
+      "sssp" -> (() => Graph.sssp(wEdges, seeds, 3)),
+      "labelPropagation" -> (() => Graph.labelPropagation(edges, 3)),
+      "kCore" -> (() => Graph.kCore(edges, 1, 3)),
+      "connectedComponents" -> (() => Dedup.connectedComponents(es.toDF("a", "b"))))
+    val tiers = Seq(("local", Seq.empty[(String, String)], 0),
+      ("distributed", Seq(Tier.GraphEdges.key -> "0", Tier.CcEdges.key -> "0"), 1))
+    for ((tier, confs, bound) <- tiers; (name, op) <- ops) {
+      val (rows, resident) = Graft.withConfs(spark, confs: _*)(newPersistentRdds(op().collect()))
+      assert(rows.nonEmpty, s"$tier $name: empty")
+      assert(resident.size <= bound, s"$tier $name left ${resident.size} persistent RDDs")
     }
   }
 }

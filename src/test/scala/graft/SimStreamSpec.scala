@@ -332,9 +332,7 @@ class SimStreamSpec extends SparkSpec {
     * micro-batch (VERDICT r11 #3) — walk rounds are freed by the walk,
     * per-batch results by the gate once the sink consumed them. */
   private def noNewPersistentRdds[A](body: => A): A = {
-    val residentBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val out = body
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- residentBefore
+    val (out, leaked) = newPersistentRdds(body)
     assert(leaked.isEmpty,
       s"ingest drain leaked ${leaked.size} persistent RDDs into the block manager")
     out

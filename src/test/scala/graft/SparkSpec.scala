@@ -15,6 +15,14 @@ abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
   val sf: String = SparkSpec.sf
 
+  /** Run `body`; return its value and the ids of the persistent RDDs
+    * (checkpoints, caches) it left in the block manager. */
+  protected def newPersistentRdds[A](body: => A): (A, Set[Int]) = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val out = body
+    (out, spark.sparkContext.getPersistentRDDs.keySet.toSet -- before)
+  }
+
   /** Run `body`; return its value and the `"choice"` of every
     * `[graft-tier]` stderr line it printed for operator `op`. */
   protected def tierChoices[A](op: String)(body: => A): (A, Seq[String]) = {
